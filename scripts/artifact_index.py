@@ -45,7 +45,7 @@ def canon_sources():
 def load(path):
     """Parse a bench artifact: whole-file json.load first (handles the
     pretty-printed soak files, which the old line-oriented parse
-    mislabeled "unparseable"), then the graft.Bench one-line format;
+    mislabeled "unparseable"), then the historical one-line format;
     None only for genuinely truncated driver captures."""
     try:
         with open(path) as f:

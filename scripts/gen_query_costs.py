@@ -1,15 +1,10 @@
 #!/usr/bin/env python3
 """Regenerate src/main/scala/graft/QueryCosts.scala from BASELINE_CANON.json.
 
-The harness mains (Verify, Bench) use these canon sf0.1 minima as COST
-HINTS: Verify orders dumps cheapest-first so a driver timeout still
-certifies the maximum number of queries, and Bench (at the canon sf0.1
-scale only) skips the sf0.001 warm-up for sub-0.5s rows and re-measures
-in passes 2-3 only the rows whose running minimum exceeds 1.15x their
-canon cost (adaptive retry — a short pass-array in a bench artifact
-means "pass-1 already matched canon"). Hints only — a query absent from
-the canon gets a conservative default (full warm-up, all passes, sorts
-mid-pack), and off the sf0.1 scale both cuts default OFF.
+Verify uses these canon sf0.1 minima as COST HINTS: it orders dumps
+cheapest-first so a driver timeout still certifies the maximum number of
+queries. Hints only — a query absent from the canon gets a default that
+sorts mid-pack.
 """
 import json, pathlib
 
@@ -21,11 +16,10 @@ out = f'''package graft
 
 /** Canon sf0.1 per-query minima (seconds), generated from
   * BASELINE_CANON.json by scripts/gen_query_costs.py — regenerate after
-  * re-pinning the canon. Used by [[Verify]] (cheapest-first dump order:
-  * a driver timeout then still certifies the maximum number of queries)
-  * and [[Bench]] (skip warm-up / extra passes for sub-second rows).
-  * Hints only: a query not listed gets [[QueryCosts.default]], which is
-  * conservative (full warm-up, all passes, sorts mid-pack). */
+  * re-pinning the canon. Used by [[Verify]] for its cheapest-first dump
+  * order: a driver timeout then still certifies the maximum number of
+  * queries. Hints only: a query not listed gets [[QueryCosts.default]],
+  * which sorts mid-pack. */
 object QueryCosts {{
   /** Conservative cost for queries the canon has not measured yet. */
   val default: Double = 1.0

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Single source of truth for the engine's session semantics.
   *
-  * Every entry point (Verify, Bench, tools, the shared test session)
+  * Every entry point (Verify, the tools, the shared test session)
   * builds through [[configure]], so the semantic pins live in exactly
   * one place and `RegistrySpec` can assert them on the live session.
   *
@@ -41,13 +41,12 @@ object GraftSession {
       // (converted back in Tables.events).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Shuffle/spill/broadcast block codec (guide §2.3/§9): zstd over
-      // the lz4 default. sf10 JobProf A/B (OPTIMIZATION_r19.md §11):
+      // the lz4 default. sf10 A/B (OPTIMIZATION_r19.md §11):
       // shuffle bytes 0.30-0.78x on every heavy row (bpe_tokenize
       // 2817->834 MB, spill 4381->1410 MB) at <=1x executor CPU — at
       // cluster scale shuffle bytes cross the NIC, so the ratio is the
       // win. Results are byte-transport-level only: no query output
-      // can change. Overridable per-run via -Dspark.io.compression.codec.
-      .config("spark.io.compression.codec",
-        sys.props.getOrElse("spark.io.compression.codec", "zstd"))
+      // can change.
+      .config("spark.io.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
 }

@@ -27,10 +27,6 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.sql.types.StructType]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // -Dgraft.tables.schemaCatalog=false restores per-call inference
-    // (measurement passthrough for A/Bs, like the io codec's).
-    if (!sys.props.get("graft.tables.schemaCatalog").forall(_.toBoolean))
-      return spark.read.parquet(s"$dir/$name.parquet")
     val path = s"$dir/$name.parquet"
     val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
     val schema = schemaCache.computeIfAbsent((path, nanos),

@@ -138,11 +138,29 @@ object Sink {
     fullRefresh(spark.read.parquet(path).repartition(targetFiles), path)
   }
 
-  /** Target existence through the Hadoop FS API (local/HDFS/object
-    * store alike — a `java.io.File` probe only works on local disk). */
+  /** Whether `path` holds a loaded table: at least one visible entry,
+    * i.e. a name starting with neither `_` nor `.` (Spark's own rule
+    * for hidden files — `_SUCCESS`, `_temporary`, `.crc`). A failed
+    * first append leaves the directory behind EMPTY (or holding only
+    * `_temporary`); treating that as a table would make every later
+    * load read it and fail schema inference, so such a directory
+    * counts as absent. Listing stops at the first visible entry.
+    * Through the Hadoop FS API (local/HDFS/object store alike — a
+    * `java.io.File` probe only works on local disk). */
   def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    try {
+      val it = fs.listStatusIterator(p)
+      var found = false
+      while (!found && it.hasNext) {
+        val name = it.next().getPath.getName
+        found = !name.startsWith("_") && !name.startsWith(".")
+      }
+      found
+    } catch {
+      case _: java.io.FileNotFoundException => false
+    }
   }
 
   /** count() + conditional append with a DISK_ONLY pin spanning both

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType}
 /** Session extension registering the native expressions as SQL
   * functions (`SparkSessionExtensions.injectFunction`). Wire with
   * `SparkSession.builder().withExtensions(new GraftExtensions)` —
-  * Verify/Bench/test sessions all do. */
+  * Verify and the test sessions do. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def intLit(e: Expression, what: String): Int = e match {

@@ -554,7 +554,7 @@ case class TwoLevelCentersExpr(vec: Expression, nrm: Expression,
   * the method exceeds the JVM's huge-method JIT limit and the whole
   * projection drops to the bytecode INTERPRETER (measured 17x on the
   * sf1 corpus: 16.5 s vs 0.9 s for the bucketing scan alone, same
-  * dot-product count — AbSrpScan). Same cure as [[TopCentersExpr]]:
+  * dot-product count — SCALE.md). Same cure as [[TopCentersExpr]]:
   * a CodegenFallback boundary once per row into tight compiled Scala
   * loops is noise compared to an interpreted 36-loop method body.
   *

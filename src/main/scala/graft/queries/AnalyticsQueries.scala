@@ -1011,7 +1011,7 @@ object AnalyticsQueries {
     * order-free. */
   def bucketedJoinQ(spark: SparkSession, dir: String): DataFrame = {
     // Scoped by application id — data path AND catalog names: two
-    // concurrent sessions (e.g. Verify and Bench in separate JVMs)
+    // concurrent sessions (e.g. two Verify runs in separate JVMs)
     // must not overwrite each other's bucket layout mid-read, and if
     // they share one catalog, fixed table names would still race on
     // DROP/recreate. The layout is deleted at JVM exit (DROP TABLE on

@@ -819,16 +819,8 @@ object SimQueries {
     * of the graph family (exact baseline / trained IVF / zero-training
     * SRP), same 4-band tables as [[annSrp]]. */
   def knnGraphSrp(spark: SparkSession, dir: String): DataFrame =
-    knnGraphSrpOp(spark, dir, onePass = true)
-
-  /** [[knnGraphSrp]] with the physical-form knob exposed — the
-    * [[graft.tools.AbSrp]] A/B entry point (`onePass` is a threaded
-    * parameter, not a global; the registered query pins the
-    * production form). */
-  private[graft] def knnGraphSrpOp(spark: SparkSession, dir: String,
-      onePass: Boolean): DataFrame =
     Similarity.srpKnnGraph(augmentedVectors(spark, dir), dim = 64,
-      bands = 4, planes = SrpPlanes, k = K, onePass = onePass)
+      bands = 4, planes = SrpPlanes, k = K)
 
   /** The measured scale lever for SRP banding (SCALE.md): bucket count
     * must track corpus size — occupancy n/2^planes is what the
@@ -842,12 +834,8 @@ object SimQueries {
   private val SrpPlanesScaled = 10
 
   def knnGraphSrpScaled(spark: SparkSession, dir: String): DataFrame =
-    knnGraphSrpScaledOp(spark, dir, onePass = true)
-
-  private[graft] def knnGraphSrpScaledOp(spark: SparkSession, dir: String,
-      onePass: Boolean): DataFrame =
     Similarity.srpKnnGraph(augmentedVectors(spark, dir), dim = 64,
-      bands = 4, planes = SrpPlanesScaled, k = K, onePass = onePass)
+      bands = 4, planes = SrpPlanesScaled, k = K)
 
   /** The banding constant chosen BY THE ENGINE
     * ([[Similarity.planesFor]]): one count of the corpus sizes the
@@ -860,15 +848,10 @@ object SimQueries {
     * integer rule from count(*) and the construction from the chosen
     * width, so a green hash proves the engine's choice, not a pinned
     * constant. */
-  def knnGraphSrpAuto(spark: SparkSession, dir: String): DataFrame =
-    knnGraphSrpAutoOp(spark, dir, onePass = true)
-
-  private[graft] def knnGraphSrpAutoOp(spark: SparkSession, dir: String,
-      onePass: Boolean): DataFrame = {
+  def knnGraphSrpAuto(spark: SparkSession, dir: String): DataFrame = {
     val v = augmentedVectors(spark, dir)
     val planes = Similarity.planesFor(augmentedStats(spark, dir)._1)
-    Similarity.srpKnnGraph(v, dim = 64, bands = 4, planes = planes, k = K,
-      onePass = onePass)
+    Similarity.srpKnnGraph(v, dim = 64, bands = 4, planes = planes, k = K)
   }
 
   /** Per-vector PQ reconstruction quality ([[Pq.reconScores]]): pins

@@ -103,12 +103,8 @@ object StreamingQueries {
       // enough that per-partition state approaches the 16 MiB target
       // (>= 64 MiB here) get RocksDB; small replays keep the default.
       // Semantics are provider-invariant (the per-row oracle hashes
-      // prove no emitted row changes); -Dgraft.stream.rocksdb=
-      // true/false forces either side (A/B passthrough).
-      val rocksdb = sys.props.get("graft.stream.rocksdb")
-        .map(_.toBoolean)
-        .getOrElse(bytes >= RocksDbStateBytesMin)
-      if (rocksdb)
+      // prove no emitted row changes).
+      if (bytes >= RocksDbStateBytesMin)
         s2.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     }

@@ -311,14 +311,10 @@ object Similarity {
     * every band's bucket is computed in the same pass and exploded to
     * (band, bkt) rows, instead of unioning one corpus scan per band
     * (the pre-round-11 form read the corpus `bands` times; same rows,
-    * bit for bit — the per-band sign arithmetic is unchanged). */
-  /** `onePass` selects between the two srpBuckets physical forms
-    * (same rows, bit for bit): one-pass array+posexplode (production
-    * default — the measured winner) vs one corpus scan per band
-    * unioned. Passed explicitly by the [[graft.tools.AbSrp]] family's
-    * measurement runs; a parameter rather than the pre-round-14
-    * `@volatile var` global, so an A/B run cannot leave the production
-    * form flipped and two concurrent plans cannot race the knob. */
+    * bit for bit — the per-band sign arithmetic is unchanged).
+    * `onePass = false` keeps that per-band union as the reference form
+    * the one-pass form is tested against (SCALE.md has the measured
+    * gap); every production caller takes the default. */
   def srpBuckets(vectors: DataFrame, dim: Int, bands: Int, planes: Int,
       salt: String, onePass: Boolean = true): DataFrame = {
     require(planes <= 62, "bucket bits must fit a long")
@@ -422,9 +418,9 @@ object Similarity {
     * whose buckets hold no other vector emits no rows (blocked-ANN
     * recall honesty; [[knnGraphExact]] is the exact baseline). */
   def srpKnnGraph(corpus: DataFrame, dim: Int, bands: Int, planes: Int,
-      k: Int, salt: String = "srp", onePass: Boolean = true): DataFrame = {
+      k: Int, salt: String = "srp"): DataFrame = {
     val scored = selfPairsByBucket(
-        srpBuckets(corpus, dim, bands, planes, salt, onePass),
+        srpBuckets(corpus, dim, bands, planes, salt),
         Seq("band", "bkt"))
       .filter(col("id_a") =!= col("id_b"))
       .select(col("id_a").as("q_id"), col("id_b").as("n_id"),
@@ -588,18 +584,13 @@ object Similarity {
         count(when(col("__rn") === 1, 1))
           .over(Window.partitionBy(col("bucket")))
           .cast("double") / cellCap).cast("int"), lit(1)))
-    // -Dgraft.sim.pinRanked=false restores the exchange-reuse form
-    // (the measurement passthrough for A/Bs, like the io codec's).
     // The pin PRESERVES the bucket hash partitioning
     // ([[org.apache.spark.sql.graft.Bridge.pinPartitioned]] — a plain
     // checkpoint degrades to UnknownPartitioning and would re-insert
     // the bucket exchange the plan exists to share), so the cold
     // self-join below still plans exchange-free on both sides.
-    val withS =
-      if (!sys.props.get("graft.sim.pinRanked").forall(_.toBoolean))
-        withSPlan
-      else org.apache.spark.sql.graft.Bridge.pinPartitioned(withSPlan,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val withS = org.apache.spark.sql.graft.Bridge.pinPartitioned(
+      withSPlan, org.apache.spark.storage.StorageLevel.DISK_ONLY)
 
     def qCols: Seq[Column] =
       col("id").as("q_id") +: payload.map(c => col(c).as(s"q_$c"))
@@ -835,7 +826,7 @@ object Similarity {
     * O((coarseK + |fine|/coarseK)·dim)-per-row assignment. This is the
     * shape a real 10⁵-center deployed index needs BOTH halves of: flat
     * assignment is corpus-dependent work per row (1e5 dots at 1e5
-    * centers — the 37x AssignBench gap), and a float-vector exchange
+    * centers — the 37x gap in SCALE.md), and a float-vector exchange
     * is ~6x the bytes of the code exchange at m=8/dim=64. Encoding
     * happens ONCE before the probe fan-out (the carry-slot contract);
     * the float vector is consumed by assignment + encoding below the
@@ -853,8 +844,8 @@ object Similarity {
   /** The flat↔two-level assignment dispatch bound, ENGINE-CHOSEN (the
     * [[LiteralCentersMax]] / [[planesFor]] / `sdcGateFor` pattern —
     * a measured constant, not a per-query human choice). What it
-    * guards — corrected by the r16 `tools/AssignBench` re-measure
-    * over the 800k-row corpus (SCALE.md "the crossover, re-measured")
+    * guards — corrected by the r16 re-measure over the 800k-row
+    * corpus (SCALE.md "the crossover, re-measured")
     * — is NOT assignment time: two-level assignment is cheaper at
     * EVERY measured center count (4.5× at k=256 rising to 37× at
     * 10⁴). It is a PARTITION-QUALITY + exactness guard: on the same

@@ -4,32 +4,26 @@ import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 
-/** Machine-checks the harness's TIMEOUT-SURVIVABILITY contract — the
+/** Machine-checks [[Verify]]'s TIMEOUT-SURVIVABILITY contract — the
   * round-17 failure mode where a driver SIGKILL mid-run zeroed the
-  * round's evidence (`CORRECTNESS_r17.json` = `{}`, `BENCH_r17` rc 124
-  * with every completed measurement discarded) must be structurally
-  * impossible:
-  *
-  *  - [[Verify]] bootstraps a valid (empty) manifest BEFORE the Spark
-  *    session is constructed (a kill during JVM/Spark startup — the
-  *    round-18 diagnosis — leaves `{}`, not nothing), writes
-  *    `oracle_sql.json` incrementally (atomic temp+rename after EVERY
-  *    successful dump), prints one progress line per landed dump,
-  *    orders dumps cheapest-first by the canon minima ([[QueryCosts]]),
-  *    and merges subset runs over the prior manifest;
-  *  - [[Bench]] flushes a complete, parseable JSON artifact (with
-  *    `passes_completed`, `retry_factor`, `warmup_floor_sec`) after
-  *    EVERY measured pass, follows each full line with a compact
-  *    tail-proof summary line, skips warm-up for sub-0.5s canon rows
-  *    and re-measures in passes 2-3 only the rows whose running minimum
-  *    still exceeds their canon cost (adaptive retry) — both cuts
-  *    AT THE CANON sf0.1 SCALE ONLY (full min-of-3 + full warm-up
-  *    elsewhere: the canon says nothing about other scales).
+  * round's evidence (`CORRECTNESS_r17.json` = `{}`) must be
+  * structurally impossible. [[Verify]] bootstraps a valid (empty)
+  * manifest BEFORE the Spark session is constructed (a kill during
+  * JVM/Spark startup leaves `{}`, not nothing), writes
+  * `oracle_sql.json` incrementally (atomic temp+rename after EVERY
+  * successful dump), prints one progress line per landed dump, orders
+  * dumps cheapest-first by the canon minima ([[QueryCosts]]), and
+  * merges subset runs over the prior manifest.
   *
   * A kill is simulated in-process via SPARK_GRAFT_VERIFY_ABORT_AFTER
   * (stop dumping after N successes — byte-identical manifest state to
   * a SIGKILL between dump N and N+1, because the manifest write for
-  * dump N has already atomically landed). */
+  * dump N has already atomically landed).
+  *
+  * Two source scans guard `src/main`: temp-view names stay unique
+  * (concurrent dumps share one session), and no code reads a
+  * `graft.*` system property (behaviour switches that exist only for
+  * in-process A/B runs). */
 class HarnessSpec extends SparkSpec {
 
   private val om = new ObjectMapper()
@@ -38,9 +32,9 @@ class HarnessSpec extends SparkSpec {
     om.readValue(Paths.get(s"$dir/oracle_sql.json").toFile,
       classOf[java.util.Map[String, String]]).asScala.toMap
 
-  /** Run a main() with the given system properties set (the mains read
+  /** Run Verify.main with the given system properties set (Verify reads
     * env first, then props — the prop path exists for this spec), and
-    * the shared suite session protected from the main's stop(). */
+    * the shared suite session protected from its stop(). */
   private def withProps[A](props: Map[String, String])(body: => A): A =
     HarnessSpec.propLock.synchronized {
       val all = props + ("SPARK_GRAFT_KEEP_SESSION" -> "1")
@@ -50,30 +44,21 @@ class HarnessSpec extends SparkSpec {
     }
 
   // Fixture queries DERIVED from the live QueryCosts table so canon
-  // re-pins cannot silently invalidate the spec's assumptions:
-  //  - subset: the three cheapest canon rows (fast at sf0.001);
-  //    byCost mirrors Verify's exact (cost, name) ordering.
-  //  - onePassQ: the cheapest row; multiPassQ: a mid-cost row
-  //    (0.35-0.7 s). Pass counts are forced per-test via the retry
-  //    factor, so the only standing requirement is that both run fast
-  //    at sf0.001.
+  // re-pins cannot silently invalidate the spec's assumptions: the
+  // three cheapest canon rows (fast at sf0.001); byCost mirrors
+  // Verify's exact (cost, name) ordering.
   private val subset = SparkEntry.queries.keySet.toSeq
     .filter(QueryCosts.sf01Min.contains)
     .sortBy(q => (QueryCosts.costOf(q), q)).take(3)
   private val byCost = subset.sortBy(q => (QueryCosts.costOf(q), q))
-  private val onePassQ = byCost.head
-  private val multiPassQ = SparkEntry.queries.keySet.toSeq
-    .filter(q => QueryCosts.sf01Min.get(q).exists(c => c >= 0.35 && c < 0.7))
-    .minBy(q => (QueryCosts.costOf(q), q))
 
   test("subset queries are registered and canon-ordered as the spec assumes") {
-    (subset :+ multiPassQ).foreach { q =>
+    subset.foreach { q =>
       assert(SparkEntry.queries.contains(q), s"$q not registered")
       assert(SparkEntry.oracleSql.contains(q), s"$q has no oracle")
       assert(QueryCosts.sf01Min.contains(q), s"$q not in canon")
     }
-    assert(QueryCosts.costOf(onePassQ) < 0.25, "one-pass fixture too slow")
-    assert(QueryCosts.costOf(multiPassQ) >= 0.35, "multi-pass fixture too fast")
+    assert(subset.size == 3, s"canon lists too few registered queries: $subset")
   }
 
   test("Verify bootstraps a valid empty manifest before any Spark session exists") {
@@ -184,76 +169,6 @@ class HarnessSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(s"$out/oracle_sql.json.tmp")))
   }
 
-  test("Bench stops re-measuring a row whose pass-1 time matches its canon cost") {
-    val out = Files.createTempDirectory("graft-harness-bench")
-      .resolve("bench.json").toString
-    // A huge retry factor makes every pass-1 measurement read as
-    // "matches canon" → both rows run exactly once and the sweep is a
-    // single pass, deterministically.
-    withProps(Map(
-      "SPARK_GRAFT_QUERIES" -> s"$onePassQ,$multiPassQ",
-      "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
-      "SPARK_GRAFT_BENCH_RETRY_FACTOR" -> "1e9",
-      "SPARK_GRAFT_BENCH_OUT" -> out)) {
-      Bench.main(Array.empty)
-    }
-    val node = om.readTree(Paths.get(out).toFile)
-    assert(node.get("metric").asText === "total")
-    assert(node.get("passes_completed").asInt === 1,
-      "no retries → passes 2-3 are empty and never run")
-    assert(node.get("failed").size === 0)
-    val passes = node.get("passes")
-    assert(passes.get(onePassQ).size === 1)
-    assert(passes.get(multiPassQ).size === 1)
-    val qs = node.get("queries")
-    assert(qs.get(onePassQ).asDouble > 0)
-    assert(qs.get(multiPassQ).asDouble > 0)
-  }
-
-  test("Bench retries rows whose measurements blow past canon, and reports the min") {
-    val out = Files.createTempDirectory("graft-harness-retry")
-      .resolve("bench.json").toString
-    // Factor 0 → every row always reads as contention-polluted → full
-    // min-of-3 (also the protocol for dedicated canonical re-pin runs).
-    withProps(Map(
-      "SPARK_GRAFT_QUERIES" -> s"$onePassQ,$multiPassQ",
-      "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
-      "SPARK_GRAFT_BENCH_RETRY_FACTOR" -> "0",
-      "SPARK_GRAFT_BENCH_OUT" -> out)) {
-      Bench.main(Array.empty)
-    }
-    val node = om.readTree(Paths.get(out).toFile)
-    val passes = node.get("passes")
-    assert(passes.get(onePassQ).size === 3,
-      "polluted row must be re-measured in the remaining passes")
-    assert(passes.get(multiPassQ).size === 3)
-    assert(node.get("passes_completed").asInt === 3)
-    // Minimum over the recorded passes is what "queries" reports.
-    val mins = (0 until 3).map(i => passes.get(multiPassQ).get(i).asDouble)
-    assert(math.abs(node.get("queries").get(multiPassQ).asDouble - mins.min) < 1e-9)
-  }
-
-  test("Bench killed between passes leaves a parseable artifact covering the completed passes") {
-    val out = Files.createTempDirectory("graft-harness-kill")
-      .resolve("bench.json").toString
-    // Factor 0 forces a 3-pass row; aborting after pass 1 is
-    // byte-identical to a SIGKILL during pass 2, because the pass-1
-    // flush already landed atomically.
-    withProps(Map(
-      "SPARK_GRAFT_QUERIES" -> multiPassQ,
-      "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
-      "SPARK_GRAFT_BENCH_RETRY_FACTOR" -> "0",
-      "SPARK_GRAFT_BENCH_ABORT_AFTER_PASS" -> "1",
-      "SPARK_GRAFT_BENCH_OUT" -> out)) {
-      Bench.main(Array.empty)
-    }
-    val node = om.readTree(Paths.get(out).toFile)
-    assert(node.get("passes_completed").asInt === 1)
-    assert(node.get("passes").get(multiPassQ).size === 1)
-    assert(node.get("queries").get(multiPassQ).asDouble > 0)
-    assert(node.get("metric").asText === "total")
-  }
-
   test("parallel-dump safety: temp-view names are globally unique in main sources") {
     // Verify runs dumps CONCURRENTLY on one shared session; temp views
     // are session-global, so two queries registering the same view name
@@ -261,91 +176,39 @@ class HarnessSpec extends SparkSpec {
     // per-query-prefixed literals — this pins that invariant for every
     // future query. (Source scan; dynamic names would need their own
     // uniqueness argument and a doc note here.)
-    val root = Paths.get("src/main/scala/graft")
-    assert(Files.isDirectory(root), s"spec expects repo-root cwd, got ${Paths.get("").toAbsolutePath}")
     val re = "createOrReplaceTempView\\(\"([^\"]+)\"\\)".r
-    val it = Files.walk(root).iterator()
-    var names = List.empty[String]
-    while (it.hasNext) {
-      val p = it.next()
-      if (p.toString.endsWith(".scala"))
-        names ++= re.findAllMatchIn(Files.readString(p)).map(_.group(1))
-    }
+    val names = mainSources.flatMap { case (_, src) =>
+      re.findAllMatchIn(src).map(_.group(1)) }
     assert(names.nonEmpty, "scan found no temp views — pattern or path drifted")
     val dups = names.groupBy(identity).collect { case (n, vs) if vs.size > 1 => n }
     assert(dups.isEmpty, s"temp-view names registered by more than one site: $dups")
   }
 
-  test("Bench's stdout ends each pass with a compact line that survives a 2 KB tail") {
-    val out = Files.createTempDirectory("graft-harness-compact")
-      .resolve("bench.json").toString
-    val buf = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(buf, true)) {
-      withProps(Map(
-        "SPARK_GRAFT_QUERIES" -> s"$onePassQ,$multiPassQ",
-        "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
-        "SPARK_GRAFT_BENCH_PASSES" -> "1",
-        "SPARK_GRAFT_BENCH_OUT" -> out)) {
-        Bench.main(Array.empty)
+  test("no behaviour switches: main sources read no graft.* system property") {
+    // One code path per behaviour: the benchmark compares whole commits,
+    // so a -Dgraft.* flag that lets one JVM A/B itself is dead weight
+    // and a second, untested form of the engine. Pins that for every
+    // future change.
+    val re = """(sys\.props|System\.getProperty|getProperties)[^\n"]*"graft\.""".r
+    val reads = mainSources.flatMap { case (p, src) =>
+      src.linesIterator.zipWithIndex.collect {
+        case (l, i) if re.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
       }
     }
-    val lines = buf.toString.linesIterator.filter(_.nonEmpty).toSeq
-    // The LAST stdout line is the compact one — that is what a driver
-    // keeping only a stdout tail parses.
-    val last = lines.last
-    assert(last.length < 512, s"compact line too long for a tail: ${last.length}")
-    val node = om.readTree(last)
-    assert(node.get("compact").asBoolean)
-    assert(node.get("metric").asText === "total")
-    assert(node.get("queries").size === 0)
-    assert(node.get("n_queries").asInt === 2)
-    assert(node.get("passes_completed").asInt === 1)
-    assert(node.get("failed").size === 0)
-    assert(node.get("value").asDouble > 0)
-    assert(node.has("retry_factor") && node.has("warmup_floor_sec"))
-    // The compact total must agree with the full artifact's.
-    val full = om.readTree(Paths.get(out).toFile)
-    assert(math.abs(full.get("value").asDouble - node.get("value").asDouble) < 1e-9)
-    assert(!full.has("compact"), "file artifact stays the full line")
+    assert(reads.isEmpty, s"graft.* system property reads in src/main:\n${reads.mkString("\n")}")
   }
 
-  test("Bench defaults to full min-of-3 and full warm-up off the canon sf0.1 scale") {
-    val out = Files.createTempDirectory("graft-harness-noncanon")
-      .resolve("bench.json").toString
-    // sf0.001 + NO retry-factor env: the canon hints must not apply —
-    // the row re-measures all three passes even though its wall time
-    // is far below its sf0.1 canon cost.
-    withProps(Map(
-      "SPARK_GRAFT_QUERIES" -> onePassQ,
-      "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
-      "SPARK_GRAFT_BENCH_OUT" -> out)) {
-      Bench.main(Array.empty)
-    }
-    val node = om.readTree(Paths.get(out).toFile)
-    assert(node.get("retry_factor").asDouble === 0.0)
-    assert(node.get("warmup_floor_sec").asDouble === 0.0)
-    assert(node.get("passes_completed").asInt === 3)
-    assert(node.get("passes").get(onePassQ).size === 3)
-  }
-
-  test("Bench honors SPARK_GRAFT_BENCH_PASSES=1 with a valid single-pass artifact") {
-    val out = Files.createTempDirectory("graft-harness-bench1")
-      .resolve("bench.json").toString
-    withProps(Map(
-      "SPARK_GRAFT_QUERIES" -> multiPassQ,
-      "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
-      "SPARK_GRAFT_BENCH_PASSES" -> "1",
-      "SPARK_GRAFT_BENCH_OUT" -> out)) {
-      Bench.main(Array.empty)
-    }
-    val node = om.readTree(Paths.get(out).toFile)
-    assert(node.get("passes_completed").asInt === 1)
-    assert(node.get("passes").get(multiPassQ).size === 1)
-    assert(node.get("queries").get(multiPassQ).asDouble > 0)
+  /** (path, text) of every Scala/Java file under src/main. */
+  private lazy val mainSources: Seq[(String, String)] = {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"spec expects repo-root cwd, got ${Paths.get("").toAbsolutePath}")
+    val it = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") || p.toString.endsWith(".java"))
+    it.map(p => p.toString -> Files.readString(p)).toSeq
   }
 }
 
 object HarnessSpec {
   /** sys.props are JVM-global; suites may run in parallel threads. */
-  val propLock = new Object
+  private val propLock = new Object
 }

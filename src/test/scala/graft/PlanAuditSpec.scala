@@ -632,40 +632,39 @@ class PlanAuditSpec extends SparkSpec {
     val semdedupPqCand = graft.queries.SimQueries.semDedupPqCandidates(
       graft.Tables.spread(graft.Tables.embeddings(spark, "/root/testdata/sf0.01"))
         .selectExpr("vec_id AS id", "embedding AS vec"))
+    def floatArrays(attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]) =
+      attrs.filter(_.dataType match {
+        case ArrayType(FloatType, _) => true
+        case _ => false
+      })
     // The knn rows' bucket exchange executes INSIDE the eager ranked
-    // pin (its subtree is a leaf in the registered plan), so the audit
-    // constructs them through the unpinned passthrough
-    // (-Dgraft.sim.pinRanked=false): the below-pin subtree is
-    // IDENTICAL in both forms — the pin only checkpoints it — so what
-    // the audit sees is byte-for-byte the exchange the pinned form
-    // runs.
-    val (ivfpq, ivf2pq) = graft.HarnessSpec.propLock.synchronized {
-      sys.props("graft.sim.pinRanked") = "false"
-      try (
-        SparkEntry.queries("knn_graph_ivfpq")(spark, "/root/testdata/sf0.01"),
-        SparkEntry.queries("knn_graph_ivf2pq")(spark, "/root/testdata/sf0.01"))
-      finally sys.props.remove("graft.sim.pinRanked")
+    // pin, so the registered plan holds its output as a pinned
+    // LogicalRDD leaf: the exchange's own columns plus `__s`. That
+    // leaf (the one with a `bucket` column) carrying no array<float>
+    // is the same invariant as the exchange carrying none.
+    for (name <- Seq("knn_graph_ivfpq",
+        // The composed two-level x PQ index makes the same promise: the
+        // float vector is consumed by coarse→fine assignment + encoding
+        // below the bucket exchange and dropped.
+        "knn_graph_ivf2pq")) {
+      val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
+      val pins = df.queryExecution.optimizedPlan.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD
+            if l.output.exists(_.name == "bucket") => l
+      }
+      assert(pins.nonEmpty, s"$name: expected the pinned ranked-cell leaf")
+      pins.foreach { l =>
+        assert(floatArrays(l.output).isEmpty,
+          s"$name: pinned bucket leaf carries float vectors: ${floatArrays(l.output)}")
+      }
     }
-    val audited = Seq(
-      "knn_graph_ivfpq" -> ivfpq,
-      // The composed two-level x PQ index makes the same promise: the
-      // float vector is consumed by coarse→fine assignment + encoding
-      // below the bucket exchange and dropped.
-      "knn_graph_ivf2pq" -> ivf2pq,
-      "semdedup_pq candidate stage" -> semdedupPqCand)
-    for ((name, df) <- audited) {
-      val reparts = df.queryExecution.optimizedPlan.collect {
-        case r: RepartitionByExpression => r
-      }
-      assert(reparts.nonEmpty, s"$name: expected the explicit bucket exchange")
-      reparts.foreach { r =>
-        val floatArrays = r.output.filter(_.dataType match {
-          case ArrayType(FloatType, _) => true
-          case _ => false
-        })
-        assert(floatArrays.isEmpty,
-          s"$name: bucket exchange carries float vectors: $floatArrays")
-      }
+    val reparts = semdedupPqCand.queryExecution.optimizedPlan.collect {
+      case r: RepartitionByExpression => r
+    }
+    assert(reparts.nonEmpty, "semdedup_pq candidate stage: expected the explicit bucket exchange")
+    reparts.foreach { r =>
+      assert(floatArrays(r.output).isEmpty,
+        s"semdedup_pq candidate stage: bucket exchange carries float vectors: ${floatArrays(r.output)}")
     }
   }
 

@@ -16,7 +16,7 @@ class RegistrySpec extends SparkSpec {
   test("session pins pre-ANSI semantics via GraftSession (the one place)") {
     // The reference runs Spark 3.3 (ANSI off): garbage casts yield
     // NULL. Spark 4 defaults ANSI on; every entry point (Verify,
-    // Bench, tools, this test session) must build through
+    // the tools, this test session) must build through
     // GraftSession.configure so the pin cannot drift per-binary.
     // COVERAGE.md "ANSI-mode audit" documents which query families
     // would change behavior if this pin were dropped.
@@ -26,11 +26,9 @@ class RegistrySpec extends SparkSpec {
         "throw instead of yielding NULL, changing E4/E16/DQ semantics")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     // r19 §11: zstd shuffle/spill codec (0.30-0.78x shuffle bytes at
-    // sf10, <=1x CPU). -Dspark.io.compression.codec still overrides
-    // (the A/B passthrough), so assert the default only when unset.
-    if (!sys.props.contains("spark.io.compression.codec"))
-      assert(spark.conf.get("spark.io.compression.codec") == "zstd",
-        "session lost the zstd shuffle-codec default (OPTIMIZATION_r19.md §11)")
+    // sf10, <=1x CPU); a constant, so no system property overrides it.
+    assert(spark.conf.get("spark.io.compression.codec") == "zstd",
+      "session lost the zstd shuffle codec (OPTIMIZATION_r19.md §11)")
   }
 
   test("every registered query has a DuckDB oracle, and vice versa") {

@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (pre-ANSI semantics, UTC,
-  * small shuffle width — mirrors the Verify/Bench session config). */
+  * small shuffle width — mirrors the Verify session config). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session shared across suites

@@ -78,6 +78,20 @@ class JobSpecSpec extends SparkSpec {
       .forall(_.getString(0).matches("[0-9A-F]{64}")))
   }
 
+  test("a target left empty by a failed first load counts as absent: the next load appends every row") {
+    // A failed first append leaves the target directory behind with no
+    // data files; reading it as a table fails schema inference, so it
+    // must be treated as not yet loaded.
+    val dir = java.nio.file.Files.createTempDirectory("graft-job-empty").toFile
+    val target = new java.io.File(dir, "ct_patient")
+    assert(target.mkdir())
+    val path = target.getAbsolutePath
+    assert(Job.load(spark, source, path, spec) == 3)
+    assert(graft.etl.Sink.pathExists(spark, path))
+    assert(spark.read.parquet(path).count() == 3)
+    assert(Job.load(spark, source, path, spec) == 0)
+  }
+
   test("drifted incremental batch conforms to the target schema instead of forking it") {
     val dir = java.nio.file.Files.createTempDirectory("graft-job-drift").toFile
     val path = new java.io.File(dir, "ct_patient").getAbsolutePath

@@ -486,39 +486,22 @@ class SimilaritySpec extends SparkSpec {
       qe.toRdd.count()
       qe.executedPlan.treeString.split("== Initial Plan ==")(0)
     }
-    graft.HarnessSpec.propLock.synchronized {
-      // Pinned default: the exchange + per-cell window run ONCE inside
-      // the eager pin; the registered plan reads the pinned leaf and —
-      // because the pin re-declares the explicit hash(bucket, W)
-      // partitioning — never re-shuffles it by bucket. "Materializes
-      // once" is by construction; what must hold in the consumer plan
-      // is ZERO bucket repartitions over the leaf.
-      val pinnedPlan = plan()
-      def np(s: String) = s.r.findAllIn(pinnedPlan).length
-      // (bucket-ONLY exchanges; the hot path's (bucket, __part)
-      // re-exchange is skew-proportional and legitimately present
-      // with the forced tiny cap.)
-      assert(pinnedPlan.contains("ExistingRDD") &&
-        np("REPARTITION_BY_(COL|NUM)") == 0 &&
-        np("hashpartitioning\\(bucket#\\d+L?, \\d+\\)") == 0,
-        s"pinned hot-branch-alive plan re-shuffled the ranked leaf:\n" +
-          pinnedPlan)
-      // Passthrough form (-Dgraft.sim.pinRanked=false — the A/B
-      // measurement escape): the pre-pin exchange-reuse invariant. In
-      // the final adaptive plan the one materialized exchange may
-      // itself print as a ReusedExchange reference (its defining stage
-      // is not re-printed), so assert "at most one non-reused mention,
-      // and reuse actually fired" rather than an exact count.
-      sys.props("graft.sim.pinRanked") = "false"
-      try {
-        val finalPlan = plan()
-        def n(s: String) = s.r.findAllIn(finalPlan).length
-        val materialized = n("REPARTITION_BY_(COL|NUM)") - n("ReusedExchange")
-        assert(materialized <= 1 && n("ReusedExchange") >= 1,
-          s"hot-branch-alive plan materialized the scan $materialized times:\n" +
-            finalPlan)
-      } finally sys.props.remove("graft.sim.pinRanked")
-    }
+    // The exchange + per-cell window run ONCE inside the eager pin;
+    // the registered plan reads the pinned leaf and — because the pin
+    // re-declares the explicit hash(bucket, W) partitioning — never
+    // re-shuffles it by bucket. "Materializes once" is by
+    // construction; what must hold in the consumer plan is ZERO
+    // bucket repartitions over the leaf.
+    val pinnedPlan = plan()
+    def np(s: String) = s.r.findAllIn(pinnedPlan).length
+    // (bucket-ONLY exchanges; the hot path's (bucket, __part)
+    // re-exchange is skew-proportional and legitimately present
+    // with the forced tiny cap.)
+    assert(pinnedPlan.contains("ExistingRDD") &&
+      np("REPARTITION_BY_(COL|NUM)") == 0 &&
+      np("hashpartitioning\\(bucket#\\d+L?, \\d+\\)") == 0,
+      s"pinned hot-branch-alive plan re-shuffled the ranked leaf:\n" +
+        pinnedPlan)
   }
 
   test("hot-cell split: a forced tiny cap produces bit-identical kNN output " +
