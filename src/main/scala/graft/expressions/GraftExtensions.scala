@@ -62,12 +62,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         SrpBucketsExpr(children.head, strLit(children(1), "salt"),
           intLit(children(2), "bands"), intLit(children(3), "planes"),
           intLit(children(4), "dim"))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_top_centers"),
-      new ExpressionInfo(classOf[TopCentersExpr].getName, "graft_top_centers"),
-      (children: Seq[Expression]) =>
-        TopCentersExpr(children.head, children(1), children(2),
-          intLit(children(3), "nearest"))))
     // Bounded-heap top-k aggregate — the engine the row_number()<=k
     // rewrite targets, also callable directly:
     // graft_top_k_by(payload_struct, order_struct, k, asc) -> array<payload>.
@@ -133,11 +127,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("graft_bq_dot"),
       new ExpressionInfo(classOf[BqDotExpr].getName, "graft_bq_dot"),
       (children: Seq[Expression]) => BqDotExpr(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_knn_topk"),
-      new ExpressionInfo(classOf[KnnTopKExpr].getName, "graft_knn_topk"),
-      (children: Seq[Expression]) =>
-        KnnTopKExpr(children.head, children(1), children(2), children(3),
-          children(4), intLit(children(5), "k"))))
   }
 }

@@ -235,7 +235,7 @@ object PqCodebook {
   * boundary costs ~6 µs/row, ~100x the arithmetic — ruinous in the
   * per-PAIR SDC path). Composing from per-subspace builtin columns
   * instead would blow the JIT's huge-method limit the moment m grows
-  * (the [[TopCentersExpr]]/[[SrpBucketsExpr]] lesson). All carry the
+  * (the [[RankCentersExpr]]/[[SrpBucketsExpr]] lesson). All carry the
   * codebook as a `Broadcast` stub, never a plan literal (codebook
   * size is an index parameter; at real scale m x ks x subDim floats
   * stay KBs, but the LUT is m x ks^2 doubles and plan literals are

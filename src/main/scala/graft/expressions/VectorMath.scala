@@ -109,132 +109,187 @@ case class DotExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** `graft_top_centers(vec array<float>, nrm double, centers
-  * array<array<float>> LITERAL, nearest)` — indices (0-based, rank
-  * order) of the `nearest` centers with the highest scaled cosine to
-  * `vec`, ties broken by smaller index. Scores are computed exactly as
-  * `Similarity.scaledFromParts(dot, nrm, centerNorm)` — double
-  * left-fold dot, `floor(dot / (nrm * cnorm) * 1e6 + 0.5)` — so the
-  * assignment is bit-identical to scoring each center with
-  * [[DotExpr]] columns.
-  *
-  * One expression eval per ROW does all k dot products in a tight
-  * loop over cached center arrays. The alternative — an `array()` of
-  * k per-center score structs — generates k inlined loops whose
-  * code size kicks the whole stage out of whole-stage codegen (the
-  * projection went interpreted, measured seconds per small scan).
-  * A CodegenFallback boundary once per row is noise by comparison.
+/** A driver-built center index, shipped to the executors as ONE
+  * `Broadcast` stub (the spark.ml pattern for k-means centers) and
+  * ranked per row by [[RankCentersExpr]]. The stub keeps plan size
+  * O(1) in |centers|: the classic IVF sizing makes |centers| ~
+  * sqrt(corpus), and at real scale (1e5 centers x 64 dims) a plan
+  * literal blows plan size and codegen constant pools long before
+  * memory matters. Every score in every case is [[CenterSet.top]].
   */
-case class TopCentersExpr(vec: Expression, nrm: Expression,
-    centers: Expression, nearest: Int)
+sealed trait CenterIndex extends Serializable {
+  /** Ids of the top-`nearest` cells of `v` (norm `vn`), rank order. */
+  def rank(v: Array[Float], vn: Double, nearest: Int): Array[Long]
+}
+
+/** Flat center set: ids ascending, one precomputed double norm per
+  * center (the same `sqrt(left-fold dot)` as
+  * [[graft.sim.Similarity.norm]], computed once on the driver so every
+  * task reuses it). Build through the companion `apply`, which sorts. */
+final case class CenterSet(ids: Array[Long], vecs: Array[Array[Float]],
+    norms: Array[Double]) extends CenterIndex {
+
+  /** The scaled-cosine top-`nearest` kernel — the one score-and-insert
+    * loop behind every IVF cell assignment, the two-level index and
+    * the exact kNN expression. Scores are
+    * `floor(dot / (vn * norm) * 1e6 + 0.5)` over the ascending-index
+    * double fold, bit-identical to
+    * `Similarity.scaledFromParts(graft_dot(v, c), vn, norm)`, so a SQL
+    * oracle replays the ranking exactly. Ties keep the smaller id
+    * (positions ascend with ids and an equal score never displaces).
+    * Centers whose dimension differs from `v` are skipped, as are NaN
+    * scores (a zero-norm side) and position `skip` (pass a negative
+    * value to skip nothing). `nearest` is small (1-2 cells, k
+    * neighbours), so insertion into parallel arrays beats sorting. */
+  def top(v: Array[Float], vn: Double, nearest: Int,
+      skip: Int = -1): CenterSet.Top = {
+    val take = math.min(nearest, vecs.length)
+    val pos = Array.fill(take)(-1)
+    val score = Array.fill(take)(Double.NegativeInfinity)
+    var size = 0
+    var c = 0
+    while (c < vecs.length) {
+      val cv = vecs(c)
+      if (c != skip && cv.length == v.length) {
+        var acc = 0d
+        var i = 0
+        while (i < v.length) { acc += v(i).toDouble * cv(i).toDouble; i += 1 }
+        val s = math.floor(acc / (vn * norms(c)) * 1e6 + 0.5)
+        var p = take
+        while (p > 0 && s > score(p - 1)) p -= 1
+        if (p < take) {
+          var j = take - 1
+          while (j > p) { score(j) = score(j - 1); pos(j) = pos(j - 1); j -= 1 }
+          score(p) = s
+          pos(p) = c
+          if (size < take) size += 1
+        }
+      }
+      c += 1
+    }
+    CenterSet.Top(pos, score, size)
+  }
+
+  def rank(v: Array[Float], vn: Double, nearest: Int): Array[Long] = {
+    val t = top(v, vn, nearest)
+    Array.tabulate(t.size)(i => ids(t.pos(i)))
+  }
+}
+
+object CenterSet {
+  /** [[CenterSet.top]]'s result: the first `size` slots of `pos` (set
+    * positions) and `score` (scaled cosines), rank order. */
+  final case class Top(pos: Array[Int], score: Array[Double], size: Int)
+
+  /** Build from (id, vec) pairs, sorted by id ascending (the
+    * tie-break order [[CenterSet.top]] relies on). */
+  def apply(centers: Array[(Long, Array[Float])]): CenterSet = {
+    val sorted = centers.sortBy(_._1)
+    CenterSet(sorted.map(_._1), sorted.map(_._2),
+      sorted.map(c => graft.sim.Similarity.normLocal(c._2)))
+  }
+}
+
+/** Two-level (coarse -> fine) IVF index: `coarse` is a small
+  * [[CenterSet]] (the index parameter — ~sqrt(|fine|) entries), and
+  * `groups` maps each coarse id to the [[CenterSet]] of fine centers
+  * whose nearest coarse center it is. Ranking picks the coarse center
+  * with `top(..., 1)`, then ranks that group with `top` — O((|coarse| +
+  * |fine|/|coarse|) * dim) per row instead of the flat O(|fine| * dim):
+  * the standard IMI/coarse-quantizer move that keeps per-row
+  * assignment work bounded as the fine-center count tracks corpus
+  * growth. A vector whose coarse group is empty ranks no cell (its
+  * rows drop at the posexplode — mirrored by the oracle's inner join
+  * on the group).
+  *
+  * APPROXIMATE by design: a vector near a coarse boundary may have its
+  * true nearest fine center in a different coarse cell. The rule is
+  * deterministic (the same kernel and tie-break at both levels) so a
+  * SQL oracle replays it exactly — recall vs the flat assignment is a
+  * measured property, not a correctness one.
+  */
+final case class TwoLevelIndex(coarse: CenterSet,
+    groups: Map[Long, CenterSet]) extends CenterIndex {
+
+  def rank(v: Array[Float], vn: Double, nearest: Int): Array[Long] = {
+    val c = coarse.top(v, vn, 1)
+    if (c.size == 0) Array.emptyLongArray
+    else groups.get(coarse.ids(c.pos(0)))
+      .fold(Array.emptyLongArray)(_.rank(v, vn, nearest))
+  }
+}
+
+/** `RankCentersExpr(vec, nrm, bc, nearest)` — the top-`nearest` cell
+  * IDS of `vec` (norm `nrm`) against the broadcast [[CenterIndex]],
+  * rank order, ties by smaller id. The one expression behind every
+  * IVF cell assignment ([[graft.sim.Similarity.rankedCells]]).
+  *
+  * One eval per ROW does all the dot products in a tight loop over
+  * the index. The alternative — an `array()` of k per-center score
+  * columns — generates k inlined loops whose code size kicks the whole
+  * stage out of whole-stage codegen (the projection went interpreted,
+  * measured seconds per small scan); a CodegenFallback boundary once
+  * per row is noise by comparison. Not a SQL function: the `Broadcast`
+  * constructor arg cannot come through the children-only
+  * `injectFunction` factory — callers build the Column via
+  * `Bridge.column`.
+  */
+case class RankCentersExpr(vec: Expression, nrm: Expression,
+    bc: org.apache.spark.broadcast.Broadcast[CenterIndex], nearest: Int)
     extends Expression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
 
-  override def children: Seq[Expression] = Seq(vec, nrm, centers)
+  override def children: Seq[Expression] = Seq(vec, nrm)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
-  override def foldable: Boolean = children.forall(_.foldable)
 
   override def checkInputDataTypes() = {
     val vecOk = vec.dataType match {
       case ArrayType(FloatType, _) => true
       case _ => false
     }
-    val cOk = centers.dataType match {
-      case ArrayType(ArrayType(FloatType, _), _) => true
-      case _ => false
-    }
-    if (vecOk && nrm.dataType == DoubleType && cOk && centers.foldable)
+    if (vecOk && nrm.dataType == DoubleType && nearest > 0)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      "graft_top_centers expects (array<float>, double, foldable array<array<float>>)")
+      "RankCentersExpr expects (array<float>, double), nearest > 0")
   }
 
-  // Centers are a literal: parse + norm them once per expression
-  // instance, not per row.
-  @transient private lazy val centerVecs: Array[Array[Float]] = {
-    val arr = centers.eval(null).asInstanceOf[ArrayData]
-    (0 until arr.numElements()).map { i =>
-      arr.getArray(i).toFloatArray()
-    }.toArray
-  }
-  @transient private lazy val centerNorms: Array[Double] =
-    centerVecs.map { c =>
-      var acc = 0d
-      c.foreach(x => acc += x.toDouble * x.toDouble)
-      math.sqrt(acc)
-    }
+  // Once per task, not per row: `bc.value` is a synchronized read.
+  @transient private lazy val index: CenterIndex = bc.value
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = vec.eval(input)
     val n = nrm.eval(input)
     if (v == null || n == null) return null
-    val arr = v.asInstanceOf[ArrayData]
-    val vn = n.asInstanceOf[Double]
-    val dim = arr.numElements()
-    val k = centerVecs.length
-    val take = math.min(nearest, k)
-    // Top-`take` selection by (score desc, index asc); `nearest` is
-    // tiny (1-2), so insertion into parallel arrays beats sorting k.
-    val topScore = Array.fill(take)(Double.NegativeInfinity)
-    val topIdx = Array.fill(take)(-1)
-    var c = 0
-    while (c < k) {
-      val cv = centerVecs(c)
-      if (cv.length == dim) {
-        var acc = 0d
-        var i = 0
-        while (i < dim) { acc += arr.getFloat(i).toDouble * cv(i); i += 1 }
-        val s = math.floor(acc / (vn * centerNorms(c)) * 1e6 + 0.5)
-        var pos = take
-        while (pos > 0 && s > topScore(pos - 1)) pos -= 1
-        if (pos < take) {
-          var j = take - 1
-          while (j > pos) {
-            topScore(j) = topScore(j - 1); topIdx(j) = topIdx(j - 1); j -= 1
-          }
-          topScore(pos) = s
-          topIdx(pos) = c
-        }
-      }
-      c += 1
-    }
-    new GenericArrayData(topIdx.filter(_ >= 0).map(_.toLong.asInstanceOf[AnyRef]))
+    new GenericArrayData(index.rank(v.asInstanceOf[ArrayData].toFloatArray(),
+      n.asInstanceOf[Double], nearest))
   }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(vec = newChildren(0), nrm = newChildren(1), centers = newChildren(2))
+    copy(vec = newChildren(0), nrm = newChildren(1))
 }
 
-/** `graft_knn_topk(vec array<float>, nrm double, self_id long,
-  * ids array<long> LITERAL, cands array<array<float>> LITERAL, k)` —
-  * the exact top-`k` neighbours of `vec` among the literal candidate
-  * matrix, excluding the candidate whose id equals `self_id`, as
+/** `KnnTopKExpr(vec, nrm, selfId, bc, k)` — the exact top-`k`
+  * neighbours of `vec` among the broadcast candidate [[CenterSet]],
+  * excluding the candidate whose id equals `selfId`, as
   * `array<struct<n_id, score_c>>` in rank order (score_c DESC, n_id
-  * ASC — candidates are scanned in ascending-id order and equal
-  * scores never displace, which reproduces `row_number` over that
-  * ordering exactly).
-  *
-  * Scores are bit-identical to the column formulation
-  * `scaledFromParts(graft_dot(vec, cand), nrm, candNorm)`: the same
-  * ascending-index double fold and the same
-  * `floor(dot / (nrm * cnorm) * 1e6 + 0.5)` — proven by the
-  * differential test against the join+window plan.
+  * ASC — [[CenterSet.top]]'s order, which reproduces `row_number` over
+  * that ordering exactly; proven by the differential test against the
+  * join+window plan). A query id absent from the candidates is owed
+  * the full min(k, n); self-kNN yields <= n-1 via the exclusion.
   *
   * Why an expression: the join+window brute force materializes
   * |q|x|n| pair ROWS through a BroadcastNestedLoopJoin and then
   * window-sorts them — at 8k vectors that is 64M 600-byte rows moved
   * and sorted to keep 3 per query. Here the same 64M dot products run
-  * inside ONE projection over the corpus (candidate arrays + norms
-  * parsed once per task, not per pair) and only the k survivors per
+  * inside ONE projection over the corpus and only the k survivors per
   * row ever become rows. CodegenFallback is fine: one boundary per
-  * ROW (thousands), not per pair (millions) — the work inside is a
-  * tight primitive loop either way. */
+  * ROW (thousands), not per pair (millions). */
 case class KnnTopKExpr(vec: Expression, nrm: Expression, selfId: Expression,
-    ids: Expression, cands: Expression, k: Int)
+    bc: org.apache.spark.broadcast.Broadcast[CenterSet], k: Int)
     extends Expression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
 
-  override def children: Seq[Expression] = Seq(vec, nrm, selfId, ids, cands)
+  override def children: Seq[Expression] = Seq(vec, nrm, selfId)
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("n_id", LongType, nullable = false),
     StructField("score_c", LongType, nullable = false))), containsNull = false)
@@ -245,302 +300,34 @@ case class KnnTopKExpr(vec: Expression, nrm: Expression, selfId: Expression,
       case ArrayType(FloatType, _) => true
       case _ => false
     }
-    val idsOk = ids.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    val cOk = cands.dataType match {
-      case ArrayType(ArrayType(FloatType, _), _) => true
-      case _ => false
-    }
-    if (vecOk && nrm.dataType == DoubleType && selfId.dataType == LongType &&
-        idsOk && ids.foldable && cOk && cands.foldable && k > 0)
+    if (vecOk && nrm.dataType == DoubleType && selfId.dataType == LongType && k > 0)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      "graft_knn_topk expects (array<float>, double, long, foldable array<long>, " +
-        "foldable array<array<float>>, k > 0)")
+      "KnnTopKExpr expects (array<float>, double, long), k > 0")
   }
 
-  // Literal candidate matrix: parse + norm once per expression
-  // instance (per task after deserialization), never per row.
-  @transient private lazy val candIds: Array[Long] =
-    ids.eval(null).asInstanceOf[ArrayData].toLongArray()
-  @transient private lazy val candVecs: Array[Array[Float]] = {
-    val arr = cands.eval(null).asInstanceOf[ArrayData]
-    Array.tabulate(arr.numElements())(i => arr.getArray(i).toFloatArray())
-  }
-  @transient private lazy val candNorms: Array[Double] =
-    candVecs.map { c =>
-      var acc = 0d
-      var i = 0
-      while (i < c.length) { acc += c(i).toDouble * c(i).toDouble; i += 1 }
-      math.sqrt(acc)
-    }
+  // Once per task, not per row: `bc.value` is a synchronized read.
+  @transient private lazy val cands: CenterSet = bc.value
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = vec.eval(input)
     val nr = nrm.eval(input)
     val sid = selfId.eval(input)
     if (v == null || nr == null || sid == null) return null
-    val q = v.asInstanceOf[ArrayData].toFloatArray()
-    val vn = nr.asInstanceOf[Double]
-    val self = sid.asInstanceOf[Long]
-    val n = candVecs.length
-    // Heap sized min(k, n), NOT min(k, n-1): the self row is excluded by
-    // id below IF it appears among the candidates, but a general caller
-    // of graft_knn_topk whose query id is absent from the candidate list
-    // is owed the full k (self-kNN still yields <= n-1 via exclusion).
-    val take = math.min(k, n)
-    val topScore = Array.fill(take)(Double.NegativeInfinity)
-    val topIdx = Array.fill(take)(-1)
-    var c = 0
-    while (c < n) {
-      val cv = candVecs(c)
-      if (candIds(c) != self && cv.length == q.length) {
-        var acc = 0d
-        var i = 0
-        while (i < q.length) { acc += q(i).toDouble * cv(i).toDouble; i += 1 }
-        val s = math.floor(acc / (vn * candNorms(c)) * 1e6 + 0.5)
-        if (take > 0 && s > topScore(take - 1)) {
-          var pos = take
-          while (pos > 0 && s > topScore(pos - 1)) pos -= 1
-          var j = take - 1
-          while (j > pos) {
-            topScore(j) = topScore(j - 1); topIdx(j) = topIdx(j - 1); j -= 1
-          }
-          topScore(pos) = s
-          topIdx(pos) = c
-        }
-      }
-      c += 1
-    }
-    val out = (0 until take).iterator.takeWhile(topIdx(_) >= 0).map { pos =>
+    // Ids ascend, so the query's own position is a binary search
+    // (negative — skip nothing — when it is not a candidate).
+    val t = cands.top(v.asInstanceOf[ArrayData].toFloatArray(),
+      nr.asInstanceOf[Double], k,
+      java.util.Arrays.binarySearch(cands.ids, sid.asInstanceOf[Long]))
+    new GenericArrayData(Array.tabulate[AnyRef](t.size) { i =>
       org.apache.spark.sql.catalyst.InternalRow(
-        candIds(topIdx(pos)), topScore(pos).toLong): AnyRef
-    }.toArray
-    new GenericArrayData(out)
+        cands.ids(t.pos(i)), t.score(i).toLong)
+    })
   }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(vec = newChildren(0), nrm = newChildren(1), selfId = newChildren(2),
-      ids = newChildren(3), cands = newChildren(4))
-}
-
-/** Driver-built, broadcast-shipped center set for the IVF family: ids
-  * ascending, one pre-computed double norm per center (the same
-  * `sqrt(left-fold dot)` as [[graft.sim.Similarity.norm]], computed
-  * once at construction so every task reuses it).
-  *
-  * Why this exists: [[TopCentersExpr]] ships its centers as a plan
-  * LITERAL — fine for an index parameter like a fixed k=32, but the
-  * classic IVF sizing makes |centers| ~ sqrt(corpus), and at real
-  * scale (1e5 centers x 64 dims) a literal blows plan size and codegen
-  * constant pools long before memory matters. A `Broadcast` handle
-  * serializes into tasks as a stub (the spark.ml pattern for shipping
-  * k-means centers), keeping plan size O(1) in |centers| while the
-  * assignment math stays bit-identical.
-  */
-case class CenterSet(ids: Array[Long], vecs: Array[Array[Float]],
-    norms: Array[Double]) extends Serializable
-
-object CenterSet {
-  /** Build from (id, vec) pairs; sorts by id ascending so positional
-    * tie-breaks reproduce [[TopCentersExpr]]'s id-ascending order. */
-  def apply(centers: Array[(Long, Array[Float])]): CenterSet = {
-    val sorted = centers.sortBy(_._1)
-    CenterSet(sorted.map(_._1), sorted.map(_._2),
-      sorted.map(_._2).map { c =>
-        var acc = 0d
-        var i = 0
-        while (i < c.length) { acc += c(i).toDouble * c(i).toDouble; i += 1 }
-        math.sqrt(acc)
-      })
-  }
-}
-
-/** `BroadcastCentersExpr(vec, nrm, bc, nearest)` — the broadcast-handle
-  * twin of [[TopCentersExpr]]: ranks the broadcast [[CenterSet]]
-  * against `vec` and returns the top-`nearest` center IDS (not
-  * indices — the set carries its ids) in rank order, ties by smaller
-  * id. Scores are the identical
-  * `floor(dot / (nrm * centerNorm) * 1e6 + 0.5)` double math, so the
-  * two paths are bit-equal (differential-tested in SimilaritySpec).
-  *
-  * Not registered as a SQL function: the `Broadcast` constructor arg
-  * cannot come through the children-only `injectFunction` factory —
-  * callers build the Column via `Bridge.column`. CodegenFallback for
-  * the same reason as [[TopCentersExpr]]: one boundary per row is
-  * noise next to the k-dot-products loop inside.
-  */
-case class BroadcastCentersExpr(vec: Expression, nrm: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[CenterSet], nearest: Int)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def children: Seq[Expression] = Seq(vec, nrm)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes() = {
-    val vecOk = vec.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (vecOk && nrm.dataType == DoubleType && nearest > 0)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      "BroadcastCentersExpr expects (array<float>, double), nearest > 0")
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = vec.eval(input)
-    val n = nrm.eval(input)
-    if (v == null || n == null) return null
-    val cs = bc.value
-    val arr = v.asInstanceOf[ArrayData]
-    val vn = n.asInstanceOf[Double]
-    val dim = arr.numElements()
-    val k = cs.vecs.length
-    val take = math.min(nearest, k)
-    val topScore = Array.fill(take)(Double.NegativeInfinity)
-    val topIdx = Array.fill(take)(-1)
-    var c = 0
-    while (c < k) {
-      val cv = cs.vecs(c)
-      if (cv.length == dim) {
-        var acc = 0d
-        var i = 0
-        while (i < dim) { acc += arr.getFloat(i).toDouble * cv(i); i += 1 }
-        val s = math.floor(acc / (vn * cs.norms(c)) * 1e6 + 0.5)
-        var pos = take
-        while (pos > 0 && s > topScore(pos - 1)) pos -= 1
-        if (pos < take) {
-          var j = take - 1
-          while (j > pos) {
-            topScore(j) = topScore(j - 1); topIdx(j) = topIdx(j - 1); j -= 1
-          }
-          topScore(pos) = s
-          topIdx(pos) = c
-        }
-      }
-      c += 1
-    }
-    new GenericArrayData(
-      topIdx.filter(_ >= 0).map(i => cs.ids(i).asInstanceOf[AnyRef]))
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(vec = newChildren(0), nrm = newChildren(1))
-}
-
-/** Two-level (coarse -> fine) IVF index, driver-built and
-  * broadcast-shipped: `coarse` is a small [[CenterSet]] (the index
-  * parameter — ~sqrt(|fine|) entries), and `groups` maps each coarse
-  * id to the [[CenterSet]] of fine centers whose nearest coarse center
-  * it is. Ranking a vector costs O((|coarse| + |fine|/|coarse|) * dim)
-  * instead of the flat path's O(|fine| * dim) — the standard IMI/
-  * coarse-quantizer move that keeps per-row assignment work bounded as
-  * the fine-center count tracks corpus growth.
-  *
-  * APPROXIMATE by design: a vector near a coarse boundary may have its
-  * true nearest fine center in a different coarse cell. The rule is
-  * deterministic (argmax scaled-cosine, ties by smaller id, at both
-  * levels) so a SQL oracle replays it exactly — recall vs the flat
-  * assignment is a measured property, not a correctness one.
-  */
-case class TwoLevelIndex(coarse: CenterSet,
-    groups: Map[Long, CenterSet]) extends Serializable
-
-/** `TwoLevelCentersExpr(vec, nrm, bc, nearest)` — ranks `vec` against a
-  * broadcast [[TwoLevelIndex]]: pick the nearest coarse center (rank-1,
-  * ties by smaller id), then return the top-`nearest` fine-center IDS
-  * within that coarse group (same score math and tie-break). A vector
-  * whose coarse group is empty emits an empty array (its rows drop at
-  * the posexplode — mirrored by the oracle's inner join on the group).
-  */
-case class TwoLevelCentersExpr(vec: Expression, nrm: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[TwoLevelIndex], nearest: Int)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def children: Seq[Expression] = Seq(vec, nrm)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes() = {
-    val vecOk = vec.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (vecOk && nrm.dataType == DoubleType && nearest > 0)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      "TwoLevelCentersExpr expects (array<float>, double), nearest > 0")
-  }
-
-  /** Rank-1 index into `cs` by (score desc, position asc), or -1. */
-  private def argmax(arr: ArrayData, dim: Int, vn: Double, cs: CenterSet): Int = {
-    var best = -1
-    var bestScore = Double.NegativeInfinity
-    var c = 0
-    while (c < cs.vecs.length) {
-      val cv = cs.vecs(c)
-      if (cv.length == dim) {
-        var acc = 0d
-        var i = 0
-        while (i < dim) { acc += arr.getFloat(i).toDouble * cv(i); i += 1 }
-        val s = math.floor(acc / (vn * cs.norms(c)) * 1e6 + 0.5)
-        if (s > bestScore) { bestScore = s; best = c }
-      }
-      c += 1
-    }
-    best
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = vec.eval(input)
-    val n = nrm.eval(input)
-    if (v == null || n == null) return null
-    val idx = bc.value
-    val arr = v.asInstanceOf[ArrayData]
-    val vn = n.asInstanceOf[Double]
-    val dim = arr.numElements()
-    val ci = argmax(arr, dim, vn, idx.coarse)
-    if (ci < 0) return new GenericArrayData(Array.empty[AnyRef])
-    val group = idx.groups.getOrElse(idx.coarse.ids(ci), null)
-    if (group == null) return new GenericArrayData(Array.empty[AnyRef])
-    val k = group.vecs.length
-    val take = math.min(nearest, k)
-    val topScore = Array.fill(take)(Double.NegativeInfinity)
-    val topIdx = Array.fill(take)(-1)
-    var c = 0
-    while (c < k) {
-      val cv = group.vecs(c)
-      if (cv.length == dim) {
-        var acc = 0d
-        var i = 0
-        while (i < dim) { acc += arr.getFloat(i).toDouble * cv(i); i += 1 }
-        val s = math.floor(acc / (vn * group.norms(c)) * 1e6 + 0.5)
-        var pos = take
-        while (pos > 0 && s > topScore(pos - 1)) pos -= 1
-        if (pos < take) {
-          var j = take - 1
-          while (j > pos) {
-            topScore(j) = topScore(j - 1); topIdx(j) = topIdx(j - 1); j -= 1
-          }
-          topScore(pos) = s
-          topIdx(pos) = c
-        }
-      }
-      c += 1
-    }
-    new GenericArrayData(
-      topIdx.filter(_ >= 0).map(i => group.ids(i).asInstanceOf[AnyRef]))
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(vec = newChildren(0), nrm = newChildren(1))
+    copy(vec = newChildren(0), nrm = newChildren(1), selfId = newChildren(2))
 }
 
 /** `graft_srp_buckets(vec array<float>, salt, bands, planes, dim)` —
@@ -554,7 +341,7 @@ case class TwoLevelCentersExpr(vec: Expression, nrm: Expression,
   * the method exceeds the JVM's huge-method JIT limit and the whole
   * projection drops to the bytecode INTERPRETER (measured 17x on the
   * sf1 corpus: 16.5 s vs 0.9 s for the bucketing scan alone, same
-  * dot-product count — SCALE.md). Same cure as [[TopCentersExpr]]:
+  * dot-product count — SCALE.md). Same cure as [[RankCentersExpr]]:
   * a CodegenFallback boundary once per row into tight compiled Scala
   * loops is noise compared to an interpreted 36-loop method body.
   *

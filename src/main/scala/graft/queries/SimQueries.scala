@@ -247,10 +247,8 @@ object SimQueries {
   /** [[FlatBaseAssign]] with the cell count already measured (shared
     * base-table stats — no count job over the spread frame). */
   private[graft] def flatAssignK(k: Long): DataFrame => (DataFrame => DataFrame) =
-    base => {
-      val centers = KMeans.fitCenters(base, 0L until k, iters = 1)
-      df => Similarity.assignByCenters(df, centers)
-    }
+    base => Similarity.assignerOver(graft.expressions.CenterSet(
+      KMeans.fitCenters(base, 0L until k, iters = 1)))
 
   /** The TWO-LEVEL base-trained assigner builder — the `assignFor`
     * slot of the forced coarse→fine rows ([[embeddingDedupIvf2Incr]],
@@ -264,9 +262,8 @@ object SimQueries {
   private[graft] def twoLevelAssignK(k: Long): DataFrame => (DataFrame => DataFrame) =
     base => {
       val centers = KMeans.fitCenters(base, 0L until k, iters = 1)
-      val index = Similarity.buildTwoLevelIndex(centers,
-        Similarity.coarseKFor(centers.length))
-      df => Similarity.assignByTwoLevel(df, index)
+      Similarity.assignerOver(Similarity.buildTwoLevelIndex(centers,
+        Similarity.coarseKFor(centers.length)))
     }
 
   /** Shared body of the FLOAT-path incremental maintenance family
@@ -1420,7 +1417,7 @@ object SimQueries {
     *  1. `c0`: initial centers = corpus rows with id < cells (the
     *     `initIds = 0 until cells` filter);
     *  2. `a0`: argmax-cosine assignment to the initial centers
-    *     (score desc, center id asc — [[graft.expressions.TopCentersExpr]]'s
+    *     (score desc, center id asc — [[graft.expressions.CenterSet.top]]'s
     *     tie-break);
     *  3. `mm`/`cc`: per-(cell, position) member mean via the SAME
     *     exact integer-sum formula as [[KMeans.stepCenters]]
@@ -1469,8 +1466,8 @@ object SimQueries {
        |cn AS (SELECT c_id, c_vec, sqrt(${dotSql("c_vec", "c_vec")}) AS c_nrm FROM cc)""".stripMargin
 
   /** SQL replay of the TWO-LEVEL assignment
-    * ([[Similarity.buildTwoLevelIndex]] +
-    * [[Similarity.rankedCellsTwoLevel]]) over the `cn` fine centers:
+    * ([[Similarity.buildTwoLevelIndex]], ranked by
+    * [[Similarity.rankedCells]]) over the `cn` fine centers:
     * init coarse = the coarseK lowest-id fine centers (coarseK =
     * max(4, round(sqrt(|fine|))) — the n^(1/4) rule), fine centers
     * grouped under their argmax init-coarse, coarse centers REFINED to

@@ -362,7 +362,8 @@ object StreamingQueries {
     val centers = KMeans.fitCenters(base,
       0L until SimQueries.sqrtCellsOf(SimQueries.plainStats(spark, dir)._2),
       iters = 1)
-    val baseA = Similarity.assignByCenters(base, centers)
+    val assign = Similarity.assignerOver(graft.expressions.CenterSet(centers))
+    val baseA = assign(base)
       .select(col("bucket"), col("id").as("base_id"),
         col("vec").as("b_vec"), col("nrm").as("b_nrm"))
     val delta = deltaOverride.getOrElse {
@@ -376,7 +377,7 @@ object StreamingQueries {
         .filter(col("id") % 10 >= 8)
     }
     val disjoint = disjointIds || deltaOverride.isEmpty
-    val pairs = Similarity.assignByCenters(delta, centers)
+    val pairs = assign(delta)
       .select(col("bucket"), col("id").as("delta_id"),
         col("vec").as("d_vec"), col("nrm").as("d_nrm"))
       .join(baseA, Seq("bucket"))
@@ -426,7 +427,8 @@ object StreamingQueries {
       { val cb = Pq.fitCodebooks(base)
         (cb, SimQueries.sdcGateFor(base, cb)) })
     val bc = Pq.broadcastCodebook(base, cb)
-    val baseCoded = Similarity.assignByCenters(base, centers)
+    val assign = Similarity.assignerOver(graft.expressions.CenterSet(centers))
+    val baseCoded = assign(base)
       .withColumn("codes", Pq.encodeCol("vec", bc))
       .withColumn("rnrm", Pq.normCol("codes", bc))
       .select(col("bucket"), col("id").as("base_id"),
@@ -444,7 +446,7 @@ object StreamingQueries {
         .filter(col("id") % 10 >= 8)
     }
     val disjoint = disjointIds || deltaOverride.isEmpty
-    val pairs = Similarity.assignByCenters(delta, centers)
+    val pairs = assign(delta)
       .withColumn("codes", Pq.encodeCol("vec", bc))
       .withColumn("rnrm", Pq.normCol("codes", bc))
       .select(col("bucket"), col("id").as("delta_id"),

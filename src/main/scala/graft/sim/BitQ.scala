@@ -118,13 +118,15 @@ object BitQ {
   def ivfTopKByCentersBq(queries: DataFrame, corpus: DataFrame,
       centers: Array[(Long, Array[Float])], k: Int,
       nprobe: Int = 1): DataFrame = {
-    val cB = Similarity.assignByCenters(corpus, centers)
+    val index = Similarity.broadcastIndex(corpus,
+      graft.expressions.CenterSet(centers))
+    val cB = Similarity.assignByIndex(corpus, index)
       .withColumn("bq", encodeCol(col("vec")))
       .select(col("bucket"), col("id").as("n_id"),
         col("bq.code").as("code"), col("bq.bsum").as("bsum"),
         col("nrm").as("n_nrm"))
       .filter(col("bsum") > 0d)
-    val qB = Similarity.rankedCells(queries, centers, nprobe)
+    val qB = Similarity.rankedCells(queries, index, nprobe)
       .select(col("bucket"), col("id").as("q_id"),
         rotatedCol(col("vec")).as("q_rv"), col("nrm").as("q_nrm"))
     val scored = broadcast(qB).join(cB, Seq("bucket"))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * Execution shape — the spark.ml pattern: the k centers live on the
   * DRIVER (k·dim floats — bytes, not data), so per iteration the only
   * cluster work is ONE aggregation job over the corpus (assignment is
-  * a shuffle-free projection: argmax over k literal center vectors),
+  * a shuffle-free projection: argmax over k broadcast center vectors),
   * ending in a k·dim-row collect. No join, no window, no checkpoint
   * in the loop; the corpus is scanned once per iteration, which is the
   * 100 TB-shaped cost floor for Lloyd's algorithm.

@@ -41,7 +41,7 @@ object Pq {
   // ------------------------------------------------------------ columns
 
   /** All column builders take attribute NAMES (the
-    * [[Similarity.rankedCellsBroadcast]] pattern): the broadcast
+    * [[Similarity.rankedCells]] pattern): the broadcast
     * constructor arg keeps these off the `injectFunction` registry, so
     * the Column is built directly over the raw expression. */
   def encodeCol(vec: String, bc: Broadcast[PqCodebook]): Column =

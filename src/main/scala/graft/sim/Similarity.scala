@@ -1,8 +1,12 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.expressions.{CenterIndex, CenterSet, TwoLevelIndex}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -17,11 +21,12 @@ import org.apache.spark.sql.functions._
   *  - [[bruteForceTopK]]: exact top-k; cost O(|queries| x |corpus|)
   *    with the query side broadcast — the correctness baseline, and
   *    the right plan when |queries| is small.
-  *  - [[ivfTopK]]: IVF-style bucketing — assign every vector to its
-  *    nearest centroid (|centroids| ~ sqrt(n), broadcast), search only
-  *    the query's bucket: O(n/k) work per query at recall < 1. This is
-  *    the 100 TB path: the corpus is shuffled once by centroid id and
-  *    each probe touches one partition-local bucket.
+  *  - [[ivfTopKByCenters]]: IVF-style bucketing — assign every vector
+  *    to its nearest driver-side center (|centers| ~ sqrt(n), one
+  *    broadcast [[CenterIndex]]), search only the query's bucket:
+  *    O(n/k) work per query at recall < 1. This is the 100 TB path:
+  *    the corpus is shuffled once by center id and each probe touches
+  *    one partition-local bucket.
   */
 object Similarity {
 
@@ -75,123 +80,73 @@ object Similarity {
     topK(scored, k)
   }
 
-  /** `nearest`-centroid assignment: (id, vec, bucket) — one row per
-    * vector per rank up to `nearest`. Centroids are broadcast; ties
-    * broken by centroid id. `nearest = 1` is the classic IVF cell
-    * assignment; higher values give multi-probe search. */
-  def assign(vectors: DataFrame, centroids: DataFrame, nearest: Int = 1): DataFrame = {
-    val c = broadcast(withNorm(centroids, "c_"))
-    val w = Window.partitionBy(col("id"))
-      .orderBy(col("c_score").desc, col("c_id").asc)
-    withNorm(vectors, "")
-      .join(c)
-      .withColumn("c_score",
-        scaledFromParts(dot(col("vec"), col("c_vec")), col("nrm"), col("c_nrm")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= nearest)
-      .select(col("id"), col("vec"), col("c_id").as("bucket"))
-  }
+  /** Ship a center index to the executors once. Ranking projections
+    * compare their index by HANDLE, not by content, so two ranking
+    * calls whose subtrees must canonicalize equal (exchange reuse)
+    * must take the same broadcast — build it once and pass it to both. */
+  def broadcastIndex(df: DataFrame, index: CenterIndex): Broadcast[CenterIndex] =
+    df.sparkSession.sparkContext.broadcast(index)
 
-  /** Centers above this count ship as a BROADCAST handle instead of a
-    * plan literal ([[rankedCells]] dispatches): a literal of 32
-    * 64-dim float vectors is ~8 KB of plan — harmless — but the
-    * classic IVF sizing makes |centers| ~ sqrt(corpus), and at real
-    * scale (1e5 centers) a literal blows plan size / codegen constant
-    * pools long before memory matters. The broadcast path is
-    * bit-equal (differential-tested in SimilaritySpec), so the switch
-    * is pure plumbing — engine-chosen, like [[planesFor]]. Set at 32
-    * (not higher) so the sqrt(n)-sized queries cross it already at the
-    * sf0.01 correctness gate — the driver's DuckDB hash check then
-    * exercises the broadcast path, not only the ScalaTest
-    * differential. */
-  private[graft] val LiteralCentersMax = 32
-
-  /** Shuffle-free centroid ranking against DRIVER-SIDE centers (the
+  /** Shuffle-free center ranking against a DRIVER-SIDE index (the
     * spark.ml pattern — k·dim floats are bytes, not data): per row,
-    * ONE native expression eval scores all k centers and keeps the top
-    * `nearest`. A pure projection — no join, no window, no exchange —
-    * with the same (score desc, centroid_id asc) tie-break as
-    * [[assign]]. Returns (id, vec, nrm, bucket, __rn 1-based).
-    *
-    * Dispatch: small center sets inline as a plan literal
-    * ([[TopCentersExpr]], fully cached per instance); sets larger than
-    * [[LiteralCentersMax]] ship as a broadcast variable
-    * ([[graft.expressions.BroadcastCentersExpr]]) so plan size stays
-    * O(1) in |centers|. Both paths produce bit-identical rows. */
-  private[sim] def rankedCells(vectors: DataFrame,
-      centers: Array[(Long, Array[Float])], nearest: Int,
-      carry: Seq[String] = Nil): DataFrame =
-    if (centers.length <= LiteralCentersMax)
-      rankedCellsLit(vectors, centers, nearest, carry)
-    else rankedCellsBroadcast(vectors, centers, nearest, carry)
-
-  private[graft] def rankedCellsLit(vectors: DataFrame,
-      centers: Array[(Long, Array[Float])], nearest: Int,
+    * ONE native [[graft.expressions.RankCentersExpr]] eval ranks the
+    * broadcast index and keeps the top `nearest` cells — flat
+    * ([[CenterSet]]) or coarse-then-fine ([[TwoLevelIndex]]). A pure
+    * projection — no join, no window, no exchange — with the
+    * (score desc, center id asc) tie-break. Returns (id, vec, nrm,
+    * carry..., bucket, __rn 1-based); `carry` columns ride through
+    * unprefixed (the IVFPQ composition threads precomputed codes
+    * through them so encoding is not re-run per probe). */
+  private[graft] def rankedCells(vectors: DataFrame,
+      index: Broadcast[CenterIndex], nearest: Int,
       carry: Seq[String] = Nil): DataFrame = {
-    // All k center scores in ONE native expression eval per row
-    // (TopCentersExpr); an array() of k per-center score columns
-    // generated k inlined dot loops whose code size kicked the stage
-    // out of whole-stage codegen. Buckets come back as center
-    // INDICES; one element_at against the literal id array translates
-    // to the centroid ids callers key on.
-    val sorted = centers.sortBy(_._1)
-    val centersLit = typedlit(sorted.map(_._2.toSeq).toSeq)
-    val idsLit = typedlit(sorted.map(_._1).toSeq)
     val carryCols = carry.map(col)
     withNorm(vectors, "", carry)
-      .withColumn("__top", call_function("graft_top_centers",
-        col("vec"), col("nrm"), centersLit, lit(nearest)))
-      .select(Seq(col("id"), col("vec"), col("nrm")) ++ carryCols :+
-        posexplode(col("__top")).as(Seq("__pos", "__idx")): _*)
-      .select(Seq(col("id"), col("vec"), col("nrm")) ++ carryCols ++ Seq(
-        element_at(idsLit, col("__idx").cast("int") + 1).as("bucket"),
-        (col("__pos") + 1).as("__rn")): _*)
-  }
-
-  /** The broadcast-handle variant of [[rankedCellsLit]] — same rows,
-    * bit for bit, but the centers travel as a `Broadcast[CenterSet]`
-    * stub in the serialized expression (the spark.ml pattern), never
-    * as a plan literal. The expression returns center IDS directly
-    * (the set carries them), so no element_at translation step. */
-  private[graft] def rankedCellsBroadcast(vectors: DataFrame,
-      centers: Array[(Long, Array[Float])], nearest: Int,
-      carry: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    val bc = vectors.sparkSession.sparkContext.broadcast(
-      graft.expressions.CenterSet(centers))
-    val carryCols = carry.map(col)
-    withNorm(vectors, "", carry)
-      .withColumn("__top", org.apache.spark.sql.graft.Bridge.column(
-        graft.expressions.BroadcastCentersExpr(
-          UnresolvedAttribute("vec"), UnresolvedAttribute("nrm"), bc, nearest)))
+      .withColumn("__top", Bridge.column(graft.expressions.RankCentersExpr(
+        UnresolvedAttribute("vec"), UnresolvedAttribute("nrm"), index, nearest)))
       .select(Seq(col("id"), col("vec"), col("nrm")) ++ carryCols :+
         posexplode(col("__top")).as(Seq("__pos", "bucket")): _*)
       .select(Seq(col("id"), col("vec"), col("nrm")) ++ carryCols ++ Seq(
         col("bucket"), (col("__pos") + 1).as("__rn")): _*)
   }
 
-  /** Nearest-center assignment from driver-side centers: (id, vec,
-    * nrm, bucket), one row per vector, shuffle-free (see
-    * [[rankedCells]]). The precomputed norm rides along so pairwise
-    * scorers over the assignment don't recompute it per pair. */
-  def assignByCenters(vectors: DataFrame,
-      centers: Array[(Long, Array[Float])]): DataFrame =
-    rankedCells(vectors, centers, 1)
+  /** Rank-1 assignment over a shipped index: (id, vec, nrm, bucket),
+    * one row per vector (none when a two-level vector's coarse group
+    * is empty). The precomputed norm rides along so pairwise scorers
+    * over the assignment don't recompute it per pair. */
+  def assignByIndex(vectors: DataFrame, index: Broadcast[CenterIndex]): DataFrame =
+    rankedCells(vectors, index, 1)
       .select(col("id"), col("vec"), col("nrm"), col("bucket"))
 
-  /** IVF search against DRIVER-SIDE trained centers — the production
-    * wiring of [[ivfTopK]]: corpus cells and query probes both come
-    * from the shuffle-free [[rankedCells]] projection (|centers| is an
-    * index parameter — bytes on the driver — never a function of
-    * corpus size), so the only exchange is the bucket-keyed join
-    * itself, and the tiny query side broadcasts. */
+  /** Nearest-center assignment from driver-side centers — see
+    * [[assignByIndex]]; ships its own broadcast. */
+  def assignByCenters(vectors: DataFrame,
+      centers: Array[(Long, Array[Float])]): DataFrame =
+    assignByIndex(vectors, broadcastIndex(vectors, CenterSet(centers)))
+
+  /** A rank-1 assigner holding ONE broadcast of `index` (made from the
+    * active session): every frame it assigns — base and delta of an
+    * incremental index, resident and streamed side of a probe — ranks
+    * the same handle. */
+  private[graft] def assignerOver(index: CenterIndex): DataFrame => DataFrame = {
+    val bc = SparkSession.active.sparkContext.broadcast(index)
+    df => assignByIndex(df, bc)
+  }
+
+  /** IVF search against DRIVER-SIDE trained centers: corpus cells and
+    * query probes both come from the shuffle-free [[rankedCells]]
+    * projection over one broadcast (|centers| is an index parameter —
+    * bytes on the driver — never a function of corpus size), so the
+    * only exchange is the bucket-keyed join itself, and the tiny query
+    * side broadcasts. */
   def ivfTopKByCenters(queries: DataFrame, corpus: DataFrame,
       centers: Array[(Long, Array[Float])], k: Int,
       nprobe: Int = 1): DataFrame = {
-    val cB = assignByCenters(corpus, centers)
+    val index = broadcastIndex(corpus, CenterSet(centers))
+    val cB = assignByIndex(corpus, index)
       .select(col("bucket"), col("id").as("n_id"), col("vec").as("n_vec"),
         col("nrm").as("n_nrm"))
-    val qB = rankedCells(queries, centers, nprobe)
+    val qB = rankedCells(queries, index, nprobe)
       .select(col("bucket"), col("id").as("q_id"), col("vec").as("q_vec"),
         col("nrm").as("q_nrm"))
     val scored = broadcast(qB).join(cB, Seq("bucket"))
@@ -215,12 +170,13 @@ object Similarity {
       cb: graft.expressions.PqCodebook, k: Int,
       nprobe: Int = 1): DataFrame = {
     val bc = Pq.broadcastCodebook(corpus, cb)
-    val cB = assignByCenters(corpus, centers)
+    val index = broadcastIndex(corpus, CenterSet(centers))
+    val cB = assignByIndex(corpus, index)
       .withColumn("codes", Pq.encodeCol("vec", bc))
       .withColumn("rnrm", Pq.normCol("codes", bc))
       .select(col("bucket"), col("id").as("n_id"),
         col("codes").as("n_codes"), col("rnrm").as("n_rnrm"))
-    val qB = rankedCells(queries, centers, nprobe)
+    val qB = rankedCells(queries, index, nprobe)
       .select(col("bucket"), col("id").as("q_id"), col("vec").as("q_vec"),
         col("nrm").as("q_nrm"))
     val scored = broadcast(qB).join(cB, Seq("bucket"))
@@ -431,8 +387,9 @@ object Similarity {
   }
 
   /** Exact all-pairs kNN graph with the candidate matrix COLLECTED to
-    * the driver and evaluated by the native
-    * [[graft.expressions.KnnTopKExpr]]: the corpus is scanned once and
+    * the driver, shipped as one broadcast [[CenterSet]] and evaluated by
+    * the native [[graft.expressions.KnnTopKExpr]] (the same
+    * [[CenterSet.top]] kernel as cell ranking): the corpus is scanned once and
     * each row's top-k neighbours come out of ONE expression eval —
     * no |n|² pair rows are ever materialized, no 64M-row window sort
     * (the join+window formulation moved ~600 bytes per PAIR; this
@@ -457,15 +414,14 @@ object Similarity {
         "envelope for small corpora. Use knnGraphTopK (IVF cells) or " +
         "srpKnnGraph (SRP banding) at scale, or raise maxCollectRows " +
         "deliberately.")
-    val cand = corpus.select(col("id"), col("vec")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-      .sortBy(_._1)
-    val idsLit = typedlit(cand.map(_._1).toSeq)
-    val vecsLit = typedlit(cand.map(_._2.toSeq).toSeq)
+    val cand = CenterSet(corpus.select(col("id"), col("vec")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray))
+    val bc = corpus.sparkSession.sparkContext.broadcast(cand)
     withNorm(corpus, "")
       .select(col("id").as("q_id"),
-        posexplode(call_function("graft_knn_topk",
-          col("vec"), col("nrm"), col("id"), idsLit, vecsLit, lit(k)))
+        posexplode(Bridge.column(graft.expressions.KnnTopKExpr(
+          UnresolvedAttribute("vec"), UnresolvedAttribute("nrm"),
+          UnresolvedAttribute("id"), bc, k)))
           .as(Seq("__pos", "__t")))
       .select(col("q_id"), (col("__pos") + 1).cast("long").as("rank"),
         col("__t.n_id").as("n_id"), col("__t.score_c").as("score_c"))
@@ -482,7 +438,8 @@ object Similarity {
     * pair scores against the brute pass's O(n²). */
   def knnGraphTopK(corpus: DataFrame, centers: Array[(Long, Array[Float])],
       k: Int, nprobe: Int = 1): DataFrame =
-    knnFromRanked(rankedCells(corpus, centers, nprobe), k)
+    knnFromRanked(rankedCells(corpus,
+      broadcastIndex(corpus, CenterSet(centers)), nprobe), k)
 
   /** In-cell search tasks are capped at this resident population:
     * a cell of pop p costs O(p²) pair scores, and one over-populated
@@ -643,18 +600,8 @@ object Similarity {
       cap: Int = CellSplitCap): DataFrame =
     graft.etl.Skew.selfPairsByBucket(frame, keys, Seq("id", "vec", "nrm"), cap)
 
-  /** Driver-side scaled cosine — the SAME ascending-index double fold
-    * and `floor(dot / (na * nb) * 1e6 + 0.5)` as [[scaledFromParts]]/
-    * [[graft.expressions.DotExpr]], for driver-side index construction
-    * that must be bit-replayable by a SQL oracle. */
-  private[graft] def scoreCLocal(a: Array[Float], na: Double,
-      b: Array[Float], nb: Double): Double = {
-    var acc = 0d
-    var i = 0
-    while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-    math.floor(acc / (na * nb) * 1e6 + 0.5)
-  }
-
+  /** Driver-side norm — the same ascending-index double fold as
+    * [[norm]]/[[graft.expressions.DotExpr]]. */
   private[graft] def normLocal(a: Array[Float]): Double = {
     var acc = 0d
     var i = 0
@@ -666,8 +613,8 @@ object Similarity {
     * fine centers: the `coarseK` LOWEST-ID fine centers become the
     * coarse quantizer, and every fine center joins the group of its
     * argmax-scaled-cosine coarse center (ties by smaller coarse id) —
-    * a deterministic rule a SQL oracle replays exactly. All scores use
-    * [[scoreCLocal]], bit-identical to the distributed expressions.
+    * a deterministic rule a SQL oracle replays exactly. The argmax is
+    * [[CenterSet.top]], the kernel the distributed ranking runs.
     *
     * Why two levels: with the classic |fine| ~ sqrt(n) sizing, flat
     * assignment costs O(|fine|·dim) per row — corpus-dependent work
@@ -677,24 +624,14 @@ object Similarity {
     * the per-row constant AND the shipped index bounded as the center
     * count tracks corpus growth. */
   def buildTwoLevelIndex(fineCenters: Array[(Long, Array[Float])],
-      coarseK: Int): graft.expressions.TwoLevelIndex = {
+      coarseK: Int): TwoLevelIndex = {
     require(coarseK >= 1, s"coarseK must be >= 1, got $coarseK")
     val sorted = fineCenters.sortBy(_._1)
     // Init coarse = the coarseK lowest-id fine centers; group every
     // fine center under its argmax init-coarse (ties by smaller id).
-    val coarse0 = sorted.take(coarseK)
-    val coarse0Norms = coarse0.map(c => normLocal(c._2))
+    val coarse0 = CenterSet(sorted.take(coarseK))
     val grouped = sorted.groupBy { case (_, v) =>
-      val vn = normLocal(v)
-      var best = -1
-      var bestScore = Double.NegativeInfinity
-      var i = 0
-      while (i < coarse0.length) {
-        val s = scoreCLocal(v, vn, coarse0(i)._2, coarse0Norms(i))
-        if (s > bestScore) { bestScore = s; best = i }
-        i += 1
-      }
-      coarse0(best)._1
+      coarse0.ids(coarse0.top(v, normLocal(v), 1).pos(0))
     }
     // REFINED coarse = exact-integer-sum mean of each group's members
     // (the KMeans.stepCenters formula, bit-replayable in SQL). Why
@@ -718,47 +655,15 @@ object Similarity {
       }
       g -> vec
     }
-    graft.expressions.TwoLevelIndex(
-      graft.expressions.CenterSet(refined),
-      grouped.map { case (g, members) =>
-        g -> graft.expressions.CenterSet(members)
-      })
+    TwoLevelIndex(CenterSet(refined),
+      grouped.map { case (g, members) => g -> CenterSet(members) })
   }
 
-  /** Two-level ranked assignment — same output contract as
-    * [[rankedCells]] (id, vec, nrm, bucket, __rn), still a pure
-    * shuffle-free projection, but per-row work is
-    * O((coarseK + |fine|/coarseK)·dim) and the index ships as ONE
-    * broadcast stub. Approximate near coarse boundaries (see
-    * [[graft.expressions.TwoLevelIndex]]); a vector whose coarse group
-    * is empty emits no rows. `carry` columns ride through unprefixed
-    * (the same carry-slot contract as [[rankedCells]] — the IVFPQ
-    * composition threads precomputed codes through it so encoding is
-    * not re-run per probe). */
-  private[graft] def rankedCellsTwoLevel(vectors: DataFrame,
-      index: graft.expressions.TwoLevelIndex, nearest: Int,
-      carry: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    val bc = vectors.sparkSession.sparkContext.broadcast(index)
-    val carryCols = carry.map(col)
-    withNorm(vectors, "", carry)
-      .withColumn("__top", org.apache.spark.sql.graft.Bridge.column(
-        graft.expressions.TwoLevelCentersExpr(
-          UnresolvedAttribute("vec"), UnresolvedAttribute("nrm"), bc, nearest)))
-      .select(Seq(col("id"), col("vec"), col("nrm")) ++ carryCols :+
-        posexplode(col("__top")).as(Seq("__pos", "bucket")): _*)
-      .select(Seq(col("id"), col("vec"), col("nrm")) ++ carryCols ++ Seq(
-        col("bucket"), (col("__pos") + 1).as("__rn")): _*)
-  }
-
-  /** Rank-1 two-level assignment: (id, vec, nrm, bucket), one row per
-    * vector — the two-level sibling of [[assignByCenters]], for index
-    * maintenance paths that pair a delta batch against the deployed
-    * coarse→fine index without retraining. */
-  def assignByTwoLevel(vectors: DataFrame,
-      index: graft.expressions.TwoLevelIndex): DataFrame =
-    rankedCellsTwoLevel(vectors, index, 1)
-      .select(col("id"), col("vec"), col("nrm"), col("bucket"))
+  /** Rank-1 two-level assignment ([[assignByIndex]] over a coarse→fine
+    * index): the two-level sibling of [[assignByCenters]]. Approximate
+    * near coarse boundaries (see [[TwoLevelIndex]]). */
+  def assignByTwoLevel(vectors: DataFrame, index: TwoLevelIndex): DataFrame =
+    assignByIndex(vectors, broadcastIndex(vectors, index))
 
   /** Self-kNN via the two-level index: identical tail to
     * [[knnGraphTopK]] (one bucket exchange, reused by both join
@@ -766,9 +671,9 @@ object Similarity {
   def knnGraphTopKTwoLevel(corpus: DataFrame,
       fineCenters: Array[(Long, Array[Float])], coarseK: Int,
       k: Int, nprobe: Int = 1): DataFrame =
-    knnFromRanked(
-      rankedCellsTwoLevel(corpus, buildTwoLevelIndex(fineCenters, coarseK),
-        nprobe), k)
+    knnFromRanked(rankedCells(corpus,
+      broadcastIndex(corpus, buildTwoLevelIndex(fineCenters, coarseK)),
+      nprobe), k)
 
   /** Self-kNN via IVF cells with PQ-COMPRESSED pair scoring — the
     * FAISS IVFPQ composition: cell assignment ranks the original
@@ -790,8 +695,7 @@ object Similarity {
       centers: Array[(Long, Array[Float])],
       cb: graft.expressions.PqCodebook, k: Int,
       nprobe: Int = 1): DataFrame =
-    knnGraphPqOver(corpus, cb, k, (coded, carry) =>
-      rankedCells(coded, centers, nprobe, carry))
+    knnGraphPqOver(corpus, cb, k, CenterSet(centers), nprobe)
 
   /** Shared tail of the PQ graph family ([[knnGraphTopKPq]] /
     * [[knnGraphTopKTwoLevelPq]]): encode ONCE before the probe
@@ -799,18 +703,18 @@ object Similarity {
     * posexplode would run the m·ks argmin nprobe times per vector —
     * the carry slot threads them through the ranking projection
     * instead), drop the float vector below the bucket exchange, and
-    * score in-cell pairs via the broadcast SDC LUT. `rankCoded` is
-    * the only thing the two compositions vary: the ranked-cells
-    * projection (flat broadcast centers vs coarse→fine index) over
-    * the coded frame, given the carry column list. The PQ scorer and
-    * payload column list exist exactly once, here. */
+    * score in-cell pairs via the broadcast SDC LUT. The center
+    * `index` is the only thing the two compositions vary (flat
+    * centers vs coarse→fine). The PQ scorer and payload column list
+    * exist exactly once, here. */
   private def knnGraphPqOver(corpus: DataFrame,
-      cb: graft.expressions.PqCodebook, k: Int,
-      rankCoded: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+      cb: graft.expressions.PqCodebook, k: Int, index: CenterIndex,
+      nprobe: Int): DataFrame = {
     val bc = Pq.broadcastCodebook(corpus, cb)
     val coded = corpus.withColumn("codes", Pq.encodeCol("vec", bc))
       .withColumn("rnrm", Pq.normCol("codes", bc))
-    val ranked = rankCoded(coded, Seq("codes", "rnrm"))
+    val ranked = rankedCells(coded, broadcastIndex(coded, index), nprobe,
+        Seq("codes", "rnrm"))
       .select(col("id"), col("codes"), col("rnrm"),
         col("bucket"), col("__rn"))
     knnFromRankedPayload(ranked, k, Seq("codes", "rnrm"), joined => joined
@@ -822,7 +726,7 @@ object Similarity {
 
   /** The FULL FAISS-style composition — two-level (coarse→fine)
     * assignment x PQ-compressed payload: [[knnGraphTopKPq]]'s
-    * codes-only exchange riding [[rankedCellsTwoLevel]]'s
+    * codes-only exchange riding the [[TwoLevelIndex]]'s
     * O((coarseK + |fine|/coarseK)·dim)-per-row assignment. This is the
     * shape a real 10⁵-center deployed index needs BOTH halves of: flat
     * assignment is corpus-dependent work per row (1e5 dots at 1e5
@@ -837,12 +741,11 @@ object Similarity {
       fineCenters: Array[(Long, Array[Float])], coarseK: Int,
       cb: graft.expressions.PqCodebook, k: Int,
       nprobe: Int = 1): DataFrame =
-    knnGraphPqOver(corpus, cb, k, (coded, carry) =>
-      rankedCellsTwoLevel(coded, buildTwoLevelIndex(fineCenters, coarseK),
-        nprobe, carry))
+    knnGraphPqOver(corpus, cb, k, buildTwoLevelIndex(fineCenters, coarseK),
+      nprobe)
 
   /** The flat↔two-level assignment dispatch bound, ENGINE-CHOSEN (the
-    * [[LiteralCentersMax]] / [[planesFor]] / `sdcGateFor` pattern —
+    * [[planesFor]] / `sdcGateFor` pattern —
     * a measured constant, not a per-query human choice). What it
     * guards — corrected by the r16 re-measure over the 800k-row
     * corpus (SCALE.md "the crossover, re-measured")
@@ -892,18 +795,17 @@ object Similarity {
   /** The engine-chosen rank-1 ASSIGNMENT BUILDER — [[knnGraphTopKAuto]]'s
     * rule factored for consumers that need the assignment projection
     * itself rather than a whole self-kNN plan (the incremental dedup
-    * family's `assignFor` slot): flat [[assignByCenters]] while
+    * family's `assignFor` slot): a flat [[CenterSet]] while
     * |centers| sits at or under `flatMax` ([[FlatCentersMax]]), the
-    * coarse→fine [[assignByTwoLevel]] (n^(1/4) sizing, index built
-    * ONCE here) past it. Identical output schema on both sides
-    * (id, vec, nrm, bucket), deterministic in |centers| alone. */
+    * coarse→fine [[TwoLevelIndex]] (n^(1/4) sizing) past it — built
+    * and broadcast ONCE here ([[assignerOver]]). Identical output
+    * schema on both sides (id, vec, nrm, bucket), deterministic in
+    * |centers| alone. */
   def assignerFor(centers: Array[(Long, Array[Float])],
       flatMax: Int = FlatCentersMax): DataFrame => DataFrame =
-    if (centers.length <= flatMax) df => assignByCenters(df, centers)
-    else {
-      val index = buildTwoLevelIndex(centers, coarseKFor(centers.length))
-      df => assignByTwoLevel(df, index)
-    }
+    assignerOver(
+      if (centers.length <= flatMax) CenterSet(centers)
+      else buildTwoLevelIndex(centers, coarseKFor(centers.length)))
 
   /** Probe-count ceiling for [[nprobeFor]]: each probe beyond the
     * first buys one mean cell of candidates at one mean cell of
@@ -1058,26 +960,5 @@ object Similarity {
       case (false, false) => knnGraphTopKTwoLevelPq(corpus, fineCenters,
         coarseKFor(fineCenters.length), Pq.fitCodebooks(corpus), k, nprobe)
     }
-  }
-
-  /** IVF search: top-k within the query's `nprobe` nearest centroid
-    * buckets. `nprobe = 1` searches only the query's own cell; larger
-    * values trade proportional extra work for recall (the corpus side
-    * stays single-assigned — cells partition the corpus, probes fan
-    * out only the tiny query side). */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
-      k: Int, nprobe: Int = 1): DataFrame = {
-    val corpusB = assign(corpus, centroids)
-    val cB = corpusB.select(col("bucket"), col("id").as("n_id"),
-      col("vec").as("n_vec"), norm(col("vec")).as("n_nrm"))
-    val qB = assign(queries, centroids, nprobe)
-      .select(col("bucket"), col("id").as("q_id"), col("vec").as("q_vec"),
-        norm(col("vec")).as("q_nrm"))
-    val scored = qB.join(cB, Seq("bucket"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        scaledFromParts(dot(col("q_vec"), col("n_vec")),
-          col("q_nrm"), col("n_nrm")).as("score_c"))
-    topK(scored, k)
   }
 }

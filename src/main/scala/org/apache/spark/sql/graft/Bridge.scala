@@ -18,7 +18,7 @@ object Bridge {
 
   /** Column over a raw catalyst [[Expression]] — needed for expressions
     * whose constructor takes non-Expression state (a `Broadcast`
-    * handle, e.g. [[graft.expressions.BroadcastCentersExpr]]) and so
+    * handle, e.g. [[graft.expressions.RankCentersExpr]]) and so
     * cannot be built through the `injectFunction` children-only
     * factory. Same access rationale as [[ofRows]]. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =

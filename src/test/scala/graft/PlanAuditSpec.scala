@@ -521,17 +521,18 @@ class PlanAuditSpec extends SparkSpec {
       "paths use the broadcast handle)") {
     // The classic IVF sizing makes |centers| ~ sqrt(corpus); shipping
     // them as a typedlit blows plan size / codegen constant pools at
-    // real scale (1e5 centers x 64 dims). Above LiteralCentersMax the
-    // engine ships a Broadcast[CenterSet] stub instead — so no plan
-    // may contain an array<array<float>> literal wider than the
-    // dispatch bound. sf0.01 puts knn_graph_ivf at ~45 fine centers
-    // (over the bound); knn_graph_ivf2's only literal is its
-    // n^(1/4)-sized coarse quantizer.
+    // real scale (1e5 centers x 64 dims). Every center ranking ships a
+    // Broadcast[CenterIndex] stub instead, and the exact kNN graph ships
+    // its collected corpus as a Broadcast[CenterSet] — so no plan may
+    // contain an array<array<float>> literal at all, whatever the
+    // center count (ann_ivf / embedding_dedup_trained run 32 or fewer
+    // centers at sf0.01).
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.types.{ArrayType, FloatType}
     for (name <- Seq("knn_graph_ivf", "knn_graph_ivf2", "knn_graph_ivfpq",
-        "knn_graph_ivf2pq")) {
+        "knn_graph_ivf2pq", "knn_graph_brute", "ann_ivf", "ann_ivf_probe2",
+        "embedding_dedup_trained")) {
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
       val widths = df.queryExecution.optimizedPlan.collect { case node =>
         node.expressions.flatMap(_.collect {
@@ -539,8 +540,8 @@ class PlanAuditSpec extends SparkSpec {
             v.numElements()
         })
       }.flatten
-      assert(widths.forall(_ <= graft.sim.Similarity.LiteralCentersMax),
-        s"$name ships a corpus-sized center literal (widths: $widths)")
+      assert(widths.isEmpty,
+        s"$name ships a center literal (widths: $widths)")
       // And the plan shape holds: no cartesian/nested-loop, the
       // bucket self-join rides the one explicit exchange.
       val plan = df.queryExecution.sparkPlan.toString()

@@ -102,26 +102,36 @@ class ExpressionsSpec extends SparkSpec {
     assert(rows.count(_.isNullAt(0)) == 2)
   }
 
-  test("graft_knn_topk returns full k when the query id is not a candidate") {
+  test("KnnTopKExpr returns full k when the query id is not a candidate") {
     // Candidates: 3 unit-ish vectors with ids 10,11,12. A query whose
     // self_id is absent must get min(k, n) = 3 neighbours, not k-1.
-    val df = Seq((Seq(1f, 0f), 1.0, 99L)).toDF("vec", "nrm", "self_id")
-    def q(k: Int) = df.select(explode(call_function("graft_knn_topk",
-        col("vec"), col("nrm"), col("self_id"),
-        typedLit(Seq(10L, 11L, 12L)),
-        typedLit(Seq(Seq(1f, 0f), Seq(0f, 1f), Seq(0.6f, 0.8f))),
-        lit(k))).as("nb"))
-      .select(col("nb.n_id")).collect().map(_.getLong(0)).toSeq
-    assert(q(3) == Seq(10L, 12L, 11L), "external query must see all n candidates")
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    val bc = spark.sparkContext.broadcast(CenterSet(Array(
+      10L -> Array(1f, 0f), 11L -> Array(0f, 1f), 12L -> Array(0.6f, 0.8f))))
+    def q(selfId: Long, k: Int) =
+      Seq((Seq(1f, 0f), 1.0, selfId)).toDF("vec", "nrm", "self_id")
+        .select(explode(org.apache.spark.sql.graft.Bridge.column(KnnTopKExpr(
+          UnresolvedAttribute("vec"), UnresolvedAttribute("nrm"),
+          UnresolvedAttribute("self_id"), bc, k))).as("nb"))
+        .select(col("nb.n_id")).collect().map(_.getLong(0)).toSeq
+    assert(q(99L, 3) == Seq(10L, 12L, 11L), "external query must see all n candidates")
     // Self-kNN still self-excludes: id 10 asking for 3 gets the other 2.
-    val self = Seq((Seq(1f, 0f), 1.0, 10L)).toDF("vec", "nrm", "self_id")
-      .select(explode(call_function("graft_knn_topk",
-        col("vec"), col("nrm"), col("self_id"),
-        typedLit(Seq(10L, 11L, 12L)),
-        typedLit(Seq(Seq(1f, 0f), Seq(0f, 1f), Seq(0.6f, 0.8f))),
-        lit(3))).as("nb"))
-      .select(col("nb.n_id")).collect().map(_.getLong(0)).toSeq
-    assert(self == Seq(12L, 11L))
+    assert(q(10L, 3) == Seq(12L, 11L))
+  }
+
+  test("CenterSet.top: ties keep the smaller id; wrong-dimension centers, " +
+      "NaN scores and the skip position never rank") {
+    // Ids 7 and 3 tie at the top score; 5 has the wrong dimension; 9 is
+    // a zero vector (0/0 score); CenterSet sorts by id: 3, 5, 7, 8, 9.
+    val cs = CenterSet(Array(7L -> Array(1f, 0f), 5L -> Array(1f, 0f, 0f),
+      3L -> Array(2f, 0f), 8L -> Array(0f, 1f), 9L -> Array(0f, 0f)))
+    val v = Array(1f, 0f)
+    assert(cs.rank(v, 1.0, 5).toSeq == Seq(3L, 7L, 8L))
+    val t = cs.top(v, 1.0, 2, skip = 0)
+    assert(t.size == 2 && t.pos.map(cs.ids(_)).toSeq == Seq(7L, 8L) &&
+      t.score.toSeq == Seq(1000000d, 0d))
+    // A two-level vector whose coarse center owns no group ranks nothing.
+    assert(TwoLevelIndex(cs, Map.empty).rank(v, 1.0, 2).isEmpty)
   }
 
   test("prefixLong and prefixHexBytes agree with conv/substring semantics") {

@@ -208,7 +208,7 @@ class PqSpec extends SparkSpec {
     val coded = v.withColumn("codes", Pq.encodeCol("vec", bc))
       .withColumn("rnrm", Pq.normCol("codes", bc))
       .select($"id".as("cid"), $"codes", $"rnrm")
-    val ranked = Similarity.rankedCellsTwoLevel(v, idx, 2)
+    val ranked = Similarity.rankedCells(v, Similarity.broadcastIndex(v, idx), 2)
       .join(coded, $"id" === $"cid")
     val probe = ranked.select($"bucket", $"id".as("q_id"),
       $"codes".as("q_codes"), $"rnrm".as("q_rnrm"))

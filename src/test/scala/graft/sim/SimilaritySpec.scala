@@ -10,6 +10,17 @@ class SimilaritySpec extends SparkSpec {
   private def vecs(rows: (Long, Seq[Float])*) =
     rows.toSeq.toDF("id", "vec")
 
+  /** Driver-side scaled cosine written out independently of the
+    * ranking kernel: the ascending-index double fold and
+    * `floor(dot / (na * nb) * 1e6 + 0.5)` — the replay reference. */
+  private def scoreC(a: Array[Float], na: Double,
+      b: Array[Float], nb: Double): Double = {
+    var acc = 0d
+    var i = 0
+    while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    math.floor(acc / (na * nb) * 1e6 + 0.5)
+  }
+
   test("cosineScaled: identical -> 1e6, orthogonal -> 0, opposite -> -1e6") {
     val v = vecs(
       1L -> Seq(1f, 0f), 2L -> Seq(1f, 0f),
@@ -206,8 +217,8 @@ class SimilaritySpec extends SparkSpec {
     val v = vecs(
       1L -> Seq(1f, 0.01f), 2L -> Seq(1f, 0.02f), 3L -> Seq(0.99f, 0f),
       10L -> Seq(0.01f, 1f), 11L -> Seq(0f, 1f))
-    val centroids = v.filter($"id" === 3 || $"id" === 11)
-    val out = Similarity.ivfTopK(v.filter($"id" === 1), v, centroids, 10)
+    val centers = Array(3L -> Array(0.99f, 0f), 11L -> Array(0f, 1f))
+    val out = Similarity.ivfTopKByCenters(v.filter($"id" === 1), v, centers, 10)
       .collect().map(_.getLong(2)).toSet
     assert(out == Set(2L, 3L)) // bucket-local: the e2 cluster never scored
   }
@@ -230,22 +241,6 @@ class SimilaritySpec extends SparkSpec {
       // The prune is real at this sf: some cluster has >= 2 members.
       assert(r.filter($"keep" === 0L).count() > 0)
     } finally r.unpersist()
-  }
-
-  test("rankedCellsBroadcast is bit-equal to the literal path (dispatch is pure plumbing)") {
-    // 40 centers > LiteralCentersMax, so the registered queries would
-    // take the broadcast path here — this pins it to the literal
-    // path's output bit for bit (ids, buckets, ranks, norms).
-    val v = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select($"vec_id".as("id"), $"embedding".as("vec"))
-    val centers = KMeans.fitCenters(v, 0L until 40L, iters = 1)
-    assert(centers.length > Similarity.LiteralCentersMax)
-    val litDf = Similarity.rankedCellsLit(v, centers, 2)
-    val bcDf = Similarity.rankedCellsBroadcast(v, centers, 2)
-    assert(litDf.count() == bcDf.count())
-    assert(litDf.exceptAll(bcDf).count() == 0 &&
-      bcDf.exceptAll(litDf).count() == 0,
-      "broadcast-handle assignment diverged from the literal path")
   }
 
   test("two-level index: groups partition fine centers under the argmax INIT " +
@@ -271,7 +266,7 @@ class SimilaritySpec extends SparkSpec {
         val vec = fineById(id)
         val vn = Similarity.normLocal(vec)
         val best = init.indices.maxBy { i =>
-          (Similarity.scoreCLocal(vec, vn, init(i)._2, initNorms(i)), -i)
+          (scoreC(vec, vn, init(i)._2, initNorms(i)), -i)
         }
         assert(init(best)._1 == g,
           s"fine center $id grouped under $g, argmax says ${init(best)._1}")
@@ -287,12 +282,14 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("rankedCellsTwoLevel matches a driver-side replay of the coarse->fine rule") {
+  test("rankedCells over a TwoLevelIndex matches a driver-side replay of the " +
+      "coarse->fine rule") {
     val v = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select($"vec_id".as("id"), $"embedding".as("vec"))
     val fine = KMeans.fitCenters(v, 0L until 40L, iters = 1)
     val idx = Similarity.buildTwoLevelIndex(fine, 6)
-    val out = Similarity.rankedCellsTwoLevel(v, idx, 2).collect()
+    val out = Similarity.rankedCells(v, Similarity.broadcastIndex(v, idx), 2)
+      .collect()
       .groupBy(_.getLong(0))
       .map { case (id, rows) =>
         id -> rows.sortBy(_.getInt(4)).map(_.getLong(3)).toSeq
@@ -302,12 +299,12 @@ class SimilaritySpec extends SparkSpec {
       val vec = r.getSeq[Float](1).toArray
       val vn = Similarity.normLocal(vec)
       val ci = idx.coarse.ids.indices.maxBy { i =>
-        (Similarity.scoreCLocal(vec, vn, idx.coarse.vecs(i),
+        (scoreC(vec, vn, idx.coarse.vecs(i),
           idx.coarse.norms(i)), -i)
       }
       val g = idx.groups(idx.coarse.ids(ci))
       val ranked = g.ids.indices
-        .map(i => (Similarity.scoreCLocal(vec, vn, g.vecs(i), g.norms(i)), i))
+        .map(i => (scoreC(vec, vn, g.vecs(i), g.norms(i)), i))
         .sortBy { case (s, i) => (-s, i) }
         .take(2).map { case (_, i) => g.ids(i) }
       id -> ranked.toSeq
@@ -480,8 +477,9 @@ class SimilaritySpec extends SparkSpec {
       .select($"vec_id".as("id"), $"embedding".as("vec"))
     val centers = KMeans.fitCenters(v, 0L until 8L, iters = 1)
     def plan(): String = {
-      val df = Similarity.knnFromRanked(
-        Similarity.rankedCellsBroadcast(v, centers, 2), 3, cellCap = 4)
+      val df = Similarity.knnFromRanked(Similarity.rankedCells(v,
+        Similarity.broadcastIndex(v, graft.expressions.CenterSet(centers)), 2),
+        3, cellCap = 4)
       val qe = df.queryExecution
       qe.toRdd.count()
       qe.executedPlan.treeString.split("== Initial Plan ==")(0)
@@ -511,8 +509,9 @@ class SimilaritySpec extends SparkSpec {
     val centers = KMeans.fitCenters(v, 0L until 8L, iters = 1)
     // cap 4 forces every cell to split into many parts; cap 1<<30
     // disables splitting entirely (s = 1 everywhere).
-    def run(cap: Int) = Similarity.knnFromRanked(
-      Similarity.rankedCellsBroadcast(v, centers, 2), 3, cellCap = cap)
+    def run(cap: Int) = Similarity.knnFromRanked(Similarity.rankedCells(v,
+      Similarity.broadcastIndex(v, graft.expressions.CenterSet(centers)), 2),
+      3, cellCap = cap)
     val split = run(4)
     val whole = run(1 << 30)
     assert(split.count() == whole.count())
